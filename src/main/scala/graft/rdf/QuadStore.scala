@@ -1,6 +1,6 @@
 package graft.rdf
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSparkInternals, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Diff of two statement sets — the unit of dataflow in the reference's
@@ -56,6 +56,17 @@ object QuadStore {
     store.join(d.removed, key, "left_anti").select(cols: _*)
       .unionByName(d.added.select(cols: _*))
   }
+
+  /** Materialize one store version: computed once, split into as many
+    * partitions as its measured bytes fill at Spark's advisory partition
+    * size, and planned from its measured size and row count (see
+    * [[org.apache.spark.sql.GraftSparkInternals.commit]]). Every store
+    * version the pipeline or the endpoint serves goes through here; a raw
+    * `localCheckpoint` of a store keeps the partitions of every union
+    * input and a size estimate multiplied up through the joins below it,
+    * which plans every BGP join as a shuffle join. Committing a committed
+    * version is a no-op. */
+  def commit(store: DataFrame): DataFrame = GraftSparkInternals.commit(store)
 
   /** Persist a store partitioned by graph; a later replace of one graph is
     * a dynamic partition overwrite touching only that directory. */

@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.AtomicReference
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LogicalPlan, Offset, Project, Sort}
 
 /** SPARQL 1.1 Protocol endpoint over a quads DataFrame — the engine's
   * front door, mirroring the reference's akka-http service
@@ -36,25 +37,31 @@ import org.apache.spark.sql.DataFrame
   */
 object SparqlEndpoint {
 
-  /** One served store version plus its term-kind side table. The table is
-    * computed (and locally checkpointed) at most ONCE per snapshot — the
-    * first JSON/XML SELECT pays three store scans + one aggregate, every
-    * later request on the same version reuses the materialized result.
-    * Updates swap in a fresh [[Snapshot]], so the cache can never serve a
-    * stale kind. */
-  final class Snapshot(val quads: DataFrame) {
+  /** One served store version plus its term-kind side table. The store
+    * is committed on construction ([[QuadStore.commit]]: materialized
+    * once, right-sized, planned from its measured size), so every request
+    * on this version scans in-memory blocks and Catalyst can broadcast a
+    * small store's BGP joins; constructing a snapshot of an already
+    * committed version runs no job. The term table is computed (and
+    * committed) at most ONCE per snapshot — the first JSON/XML SELECT
+    * pays three store scans + one aggregate, every later request on the
+    * same version reuses the materialized result. Updates swap in a fresh
+    * [[Snapshot]], so the cache can never serve a stale kind. */
+  final class Snapshot(store: DataFrame) {
+    val quads: DataFrame = QuadStore.commit(store)
+
     /** Distinct term → kind (IRI=0 wins ties: any term standing as a
       * subject or predicate is an IRI; object occurrences carry their
       * stored kind). */
     lazy val termKinds: DataFrame = {
       import org.apache.spark.sql.functions._
-      quads.select(col("o").as("__term"), col("oKind").cast("byte").as("__k"))
-        .unionByName(quads.select(col("s").as("__term"),
-          lit(Quad.IRI).cast("byte").as("__k")))
-        .unionByName(quads.select(col("p").as("__term"),
-          lit(Quad.IRI).cast("byte").as("__k")))
-        .groupBy(col("__term")).agg(min(col("__k")).as("__k"))
-        .localCheckpoint()
+      QuadStore.commit(
+        quads.select(col("o").as("__term"), col("oKind").cast("byte").as("__k"))
+          .unionByName(quads.select(col("s").as("__term"),
+            lit(Quad.IRI).cast("byte").as("__k")))
+          .unionByName(quads.select(col("p").as("__term"),
+            lit(Quad.IRI).cast("byte").as("__k")))
+          .groupBy(col("__term")).agg(min(col("__k")).as("__k")))
     }
   }
 
@@ -66,8 +73,9 @@ object SparqlEndpoint {
     def store: DataFrame = ref.get.quads
     /** Swap in a new store version (live serving: wire as
       * [[graft.streaming.QuadPipeline.run]]'s `onStore` callback so every
-      * micro-batch publishes its refreshed store here). Atomic — requests
-      * in flight finish on the old snapshot. */
+      * micro-batch publishes its refreshed store here). The version is
+      * committed before the swap; the swap itself is atomic — requests in
+      * flight finish on the old snapshot. */
     def refresh(quads: DataFrame): Unit = ref.set(new Snapshot(quads))
   }
 
@@ -147,16 +155,36 @@ object SparqlEndpoint {
     * numeric type and throw on the first IRI — so they are skipped and
     * fall through to the literal default at serialization time.
     * Cost: one hash join per string column against the per-version
-    * cached table (see [[Snapshot.termKinds]]) — no per-request scans. */
+    * cached table (see [[Snapshot.termKinds]]) — no per-request scans.
+    *
+    * A join does not keep its input's order (Catalyst even drops a sort
+    * below a join as meaningless). An ORDER BY query's rows are therefore
+    * tagged with their position before the joins and re-sorted on the tag
+    * after them. */
   private def withTermKinds(df: DataFrame, terms: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
     import org.apache.spark.sql.types.StringType
     val strCols =
       df.schema.fields.filter(_.dataType == StringType).map(_.name)
-    strCols.foldLeft(df) { (acc, c) =>
+    val ordered = isOrdered(df.queryExecution.analyzed)
+    val tagged = if (ordered) df.withColumn("__ord", monotonically_increasing_id()) else df
+    val joined = strCols.foldLeft(tagged) { (acc, c) =>
       val t = terms.select(col("__term").as(s"__t_$c"), col("__k").as(s"__kind_$c"))
       acc.join(t, acc(c) === t(s"__t_$c"), "left").drop(s"__t_$c")
     }
+    if (ordered) joined.orderBy(col("__ord")).drop("__ord") else joined
+  }
+
+  /** Whether a plan's rows come out of a global sort: a `Sort`, possibly
+    * under projections, LIMIT and OFFSET (how [[Sparql.select]] renders
+    * ORDER BY). */
+  private def isOrdered(plan: LogicalPlan): Boolean = plan match {
+    case s: Sort => s.global
+    case p: Project => isOrdered(p.child)
+    case l: GlobalLimit => isOrdered(l.child)
+    case l: LocalLimit => isOrdered(l.child)
+    case o: Offset => isOrdered(o.child)
+    case _ => false
   }
 
   /** Protocol term type for a bound value: stored kind when the store
@@ -257,9 +285,9 @@ object SparqlEndpoint {
               respond(ex, 400, "text/plain", s"malformed update: ${e.getMessage}")
               return
           }
-        // materialize the new snapshot's diff inputs before swapping so a
-        // later update's WHERE doesn't re-evaluate a deep applyDiff chain
-        ref.set(new Snapshot(QuadStore.applyDiff(ref.get.quads, diff).localCheckpoint()))
+        // the new snapshot commits its version before the swap, so a later
+        // update's WHERE doesn't re-evaluate a deep applyDiff chain
+        ref.set(new Snapshot(QuadStore.applyDiff(ref.get.quads, diff)))
         true
       }
       if (ok) respond(ex, 200, "text/plain", "")

@@ -37,33 +37,41 @@ object QuadPipeline {
 
   /** One batch step: upsert the batch's document graphs into the store
     * (replace semantics per graph), honor negations, then run the enricher
-    * chain accumulating diffs. Returns the new store.
+    * chain accumulating diffs. Returns the new store and the batch's diff.
     * This is the exact batch analogue of Pipeline.addDocumentToRepository
-    * followed by the enricher flow. */
+    * followed by the enricher flow.
+    *
+    * Every store version is committed ([[QuadStore.commit]]): the one after
+    * the batch's replace-diff and the one after each enricher. An enricher
+    * therefore scans one flat, right-sized version with measured
+    * statistics, not the anti-join/union chain of every earlier step, and
+    * the returned store is materialized. An enricher's additions keep the
+    * store a set: they are de-duplicated and anti-joined against the
+    * version the enricher read (an enricher re-deriving a quad it emitted
+    * in an earlier batch adds nothing), and a quad it both adds and removes
+    * stays. */
   def processBatch(
       store: DataFrame,
       batchQuads: DataFrame,
       negations: DataFrame,
       enrichers: Seq[Enricher]): (DataFrame, QuadDiff) = {
-    val spark = store.sparkSession
-    import spark.implicits._
+    val key = Seq("s", "p", "o", "g")
+    val cols = store.columns.map(col).toSeq
     // replace-diff per incoming graph, all graphs at once:
     val incomingGraphs = batchQuads.select("g").distinct()
     val scoped = store.join(incomingGraphs, Seq("g"), "left_semi")
-    val added0 = batchQuads.join(scoped, Seq("s", "p", "o", "g"), "left_anti")
-    val removed = scoped.join(batchQuads, Seq("s", "p", "o", "g"), "left_anti")
+    val added0 = batchQuads.join(scoped, key, "left_anti")
+    val removed = scoped.join(batchQuads, key, "left_anti")
     val added = QuadStore.guardAgainstNegations(added0, negations)
-    var diff = QuadDiff(
-      added.select(store.columns.map(col): _*),
-      removed.select(store.columns.map(col): _*))
-    var cur = QuadStore.applyDiff(store, diff)
+    var diff = QuadDiff(added.select(cols: _*), removed.select(cols: _*))
+    var cur = QuadStore.commit(QuadStore.applyDiff(store, diff))
     enrichers.foreach { e =>
       val d = e(cur, diff)
+      val add = QuadStore.guardAgainstNegations(d.added.select(cols: _*).distinct(), negations)
       val guarded = QuadDiff(
-        QuadStore.guardAgainstNegations(
-          d.added.select(cur.columns.map(col): _*), negations),
-        d.removed.select(cur.columns.map(col): _*))
-      cur = QuadStore.applyDiff(cur, guarded)
+        add.join(cur, key, "left_anti").select(cols: _*),
+        d.removed.select(cols: _*).join(add, key, "left_anti").select(cols: _*))
+      cur = QuadStore.commit(QuadStore.applyDiff(cur, guarded))
       diff = diff.union(guarded)
     }
     (cur, diff)
@@ -102,9 +110,9 @@ object QuadPipeline {
         val touched = diff.added.select("g").union(diff.removed.select("g"))
           .distinct().as[String].collect()
         if (touched.nonEmpty) {
-          // one materialization of the touched slice; dynamic overwrite
-          // replaces exactly the partitions present in it
-          val touchedNext = next.where(col("g").isin(touched.toSeq: _*)).localCheckpoint()
+          // `next` is committed: the slice reads its in-memory blocks, not
+          // the partition files the write below replaces
+          val touchedNext = next.where(col("g").isin(touched.toSeq: _*))
           val stillPresent = touchedNext.select("g").distinct().as[String].collect().toSet
           if (stillPresent.nonEmpty) QuadStore.write(touchedNext, storePath)
           // graphs the diff emptied entirely: dynamic overwrite writes no
@@ -118,14 +126,13 @@ object QuadPipeline {
           // publish the refreshed store to any live consumer (e.g. a
           // SPARQL endpoint swapping its served snapshot — the
           // reference's pipeline->repository->SparqlService shape).
-          // localCheckpoint PINS the snapshot in block storage: the next
+          // The commit PINS the snapshot in block storage: the next
           // micro-batch deletes/rewrites partition directories, and a
           // lazy file-backed plan served concurrently would hit
           // FileNotFoundException / mixed-version reads. (At real
           // cluster scale the equivalent is an MVCC manifest layout;
           // for a served store the working set is resident either way.)
-          onStore(spark.read.schema(Quad.schema).parquet(storePath)
-            .localCheckpoint(eager = true))
+          onStore(QuadStore.commit(spark.read.schema(Quad.schema).parquet(storePath)))
         }
       }
   }

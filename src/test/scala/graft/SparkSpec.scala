@@ -7,6 +7,17 @@ import org.scalatest.matchers.should.Matchers
 /** Shared local[2] session for specs (reused across suites in one JVM). */
 trait SparkSpec extends AnyFlatSpec with Matchers {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Run `body` with session confs set, restoring them after it. */
+  def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {

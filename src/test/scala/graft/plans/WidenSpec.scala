@@ -1,7 +1,6 @@
 package graft.plans
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Pins the r16 Widen hardening: the helper promises to NEVER run a job,
@@ -11,21 +10,8 @@ import org.apache.spark.sql.functions._
 class WidenSpec extends SparkSpec {
   import spark.implicits._
 
-  private def jobsDuring(body: => Unit): Int = {
-    val count = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit =
-        count.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // listener delivery is async; a short quiesce is enough for the
-      // zero-jobs assertions here (a started job posts within ms)
-      Thread.sleep(300)
-    } finally spark.sparkContext.removeSparkListener(l)
-    count.get()
-  }
+  private def jobsDuring(body: => Unit): Int =
+    org.apache.spark.JobCounter.jobsDuring(spark.sparkContext)(body)
 
   "Widen" should "not trigger any job for a post-shuffle input" in {
     // an aggregate whose byte estimate is forced over the gate, so the

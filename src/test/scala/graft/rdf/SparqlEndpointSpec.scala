@@ -43,6 +43,28 @@ class SparqlEndpointSpec extends SparkSpec {
     resp.body() should include(""""value":"Bob, \"Bobby\""""")
   }
 
+  it should "keep ORDER BY in JSON and XML results over a multi-partition store" in
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2048") {
+      // the term-kind joins run as shuffle joins over several partitions,
+      // which reorder rows unless the endpoint restores the query's order
+      val orders = (1 to 60).map(o => (f"o:$o%03d", "status", Seq("F", "O", "P")(o % 3),
+        2.toByte, null: String, null: String, "g1"))
+        .toDF("s", "p", "o", "oKind", "oDt", "oLang", "g").repartition(4)
+      val server = SparqlEndpoint.start(orders)
+      try {
+        server.store.rdd.getNumPartitions should be > 1
+        val want = (1 to 60).reverse.map(o => f"o:$o%03d")
+        val q = "SELECT ?x ?st WHERE { ?x <status> ?st } ORDER BY DESC(?x)"
+        val json = get(server, q).body()
+        """"x":\{"type":"uri","value":"([^"]+)"""".r
+          .findAllMatchIn(json).map(_.group(1)).toSeq shouldBe want
+        val xml = get(server, q, accept = "application/sparql-results+xml").body()
+        """<binding name="x"><uri>([^<]+)</uri>""".r
+          .findAllMatchIn(xml).map(_.group(1)).toSeq shouldBe want
+      } finally server.stop()
+    }
+
   it should "answer POST form bodies and stream CSV on Accept" in withServer { server =>
     val resp = client.send(
       HttpRequest.newBuilder(URI.create(s"http://localhost:${server.port}/sparql"))
@@ -200,25 +222,35 @@ class SparqlEndpointSpec extends SparkSpec {
     }
 
   it should "serve overlapping requests concurrently (nproc+1 pool)" in {
-    import spark.implicits._
-    // a store whose every scan sleeps: any query holds its worker for
-    // ~400 ms, so two requests overlapping in time proves the executor
-    // is a pool, not the old serial setExecutor(null)
-    SparqlEndpointSpec.concurrent.set(0)
-    SparqlEndpointSpec.maxConcurrent.set(0)
-    val slow = quads.as[(String, String, String, Byte, String, String, String)]
-      .mapPartitions { it =>
-        val now = SparqlEndpointSpec.concurrent.incrementAndGet()
-        SparqlEndpointSpec.maxConcurrent.accumulateAndGet(now, math.max)
+    // every request calls a SERVICE stub that holds the call for ~400 ms
+    // and counts the calls in flight, so two calls overlapping in time
+    // proves the executor is a pool, not the old serial
+    // setExecutor(null). (A store whose scan sleeps proves nothing: the
+    // served version is committed, so no request re-runs that scan.)
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+    val maxInFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stub = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("localhost", 0), 0)
+    stub.createContext("/sparql", { (ex: com.sun.net.httpserver.HttpExchange) =>
+      maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+      try {
         Thread.sleep(400)
-        SparqlEndpointSpec.concurrent.decrementAndGet()
-        it
-      }.toDF("s", "p", "o", "oKind", "oDt", "oLang", "g")
-      .coalesce(1) // one partition -> one sleep per scan
-    val server = SparqlEndpoint.start(slow)
+        val body = ("""{"head":{"vars":["n"]},"results":{"bindings":""" +
+          """[{"n":{"type":"literal","value":"Alice"}}]}}""").getBytes("UTF-8")
+        ex.getResponseHeaders.set("Content-Type", "application/sparql-results+json")
+        ex.sendResponseHeaders(200, body.length)
+        ex.getResponseBody.write(body)
+      } finally { inFlight.decrementAndGet(); ex.close() }
+    }: com.sun.net.httpserver.HttpHandler)
+    val stubPool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    stub.setExecutor(stubPool)
+    stub.start()
+    val server = SparqlEndpoint.start(quads)
     try {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      val q = "SELECT ?x WHERE { ?x <name> ?n }"
+      val q = s"""SELECT ?x WHERE { ?x <name> ?n .
+                 |  SERVICE <http://localhost:${stub.getAddress.getPort}/sparql> { ?y <name> ?n }
+                 |}""".stripMargin
       val f1 = pool.submit(new java.util.concurrent.Callable[Int] {
         def call(): Int = get(server, q).statusCode()
       })
@@ -227,10 +259,10 @@ class SparqlEndpointSpec extends SparkSpec {
       })
       f1.get() shouldBe 200
       f2.get() shouldBe 200
-      // both scans were in their sleep window at the same moment
-      SparqlEndpointSpec.maxConcurrent.get() should be >= 2
+      // both requests were in their SERVICE call at the same moment
+      maxInFlight.get() should be >= 2
       pool.shutdown()
-    } finally server.stop()
+    } finally { server.stop(); stub.stop(0); stubPool.shutdown() }
   }
 
   it should "serve CONSTRUCT results as RDF/XML on Accept, round-tripping through an XML parser" in
@@ -307,11 +339,4 @@ class SparqlEndpointSpec extends SparkSpec {
       resp.body() should include("UnionDefaultGraph")
       resp.body() should include("SPARQL11Update")
     }
-}
-
-/** Cross-thread scan-concurrency probe for the pool test (local mode:
-  * executor threads share the JVM, so statics are visible). */
-object SparqlEndpointSpec {
-  val concurrent = new java.util.concurrent.atomic.AtomicInteger(0)
-  val maxConcurrent = new java.util.concurrent.atomic.AtomicInteger(0)
 }

@@ -55,6 +55,30 @@ class PipelineSpec extends SparkSpec {
     twice.count() shouldBe once.count()
   }
 
+  it should "keep set semantics when an enricher re-emits what it derived before" in {
+    // re-derives over the WHOLE store every batch, and emits each quad
+    // twice: only quads the store lacks may land
+    val reEmit: QuadPipeline.Enricher = (st, diff) => {
+      val out = st.where($"p" === "name")
+        .select($"s", lit("NAME").as("p"), upper($"o").as("o"), $"oKind",
+          $"oDt", $"oLang", lit("enr").as("g"))
+      QuadDiff(out.union(out), diff.removed.limit(0))
+    }
+    val (round1, _) = QuadPipeline.processBatch(quadsDf(),
+      quadsDf(("a", "name", "Alice", "doc1")), noNegations, Seq(reEmit))
+    val (round2, diff2) = QuadPipeline.processBatch(round1,
+      quadsDf(("b", "name", "Bob", "doc2")), noNegations, Seq(reEmit))
+    val keys = round2.select("s", "p", "o", "g").as[(String, String, String, String)]
+      .collect().toSeq
+    keys.size - keys.distinct.size shouldBe 0
+    keys.toSet shouldBe Set(
+      ("a", "name", "Alice", "doc1"), ("a", "NAME", "ALICE", "enr"),
+      ("b", "name", "Bob", "doc2"), ("b", "NAME", "BOB", "enr"))
+    // the round's diff names only what the round added
+    diff2.added.select("s", "p", "o").as[(String, String, String)].collect().toSet shouldBe
+      Set(("b", "name", "Bob"), ("b", "NAME", "BOB"))
+  }
+
   "guarded" should "skip the enricher when no relevant additions flow" in {
     var ran = false
     val e = QuadPipeline.guarded(_.where($"p" === "location")) { (_, d) =>
