@@ -256,8 +256,8 @@ private[graft] object RdfQueries {
   }
 
   /** `{n,m}` path range quantifiers through the front end: nations within
-    * 1..3 `succ` hops (the per-region key chain from q68), expanded
-    * structurally into plain + optional steps. */
+    * 1..3 `succ` hops (the per-region key chain from q68), one join per
+    * hop level. */
   private def q91_path_quant(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("n_regionkey")).orderBy(col("n_nationkey"))
     val succ = t(s, dir, "nation")
@@ -293,8 +293,8 @@ private[graft] object RdfQueries {
 
   /** Nested property path through the driver gate (round 6): a closure
     * over a GROUPED SEQUENCE — `(cust/nation)+` — exercises the
-    * recursive path compiler (PathTriple -> pair-relation evaluator),
-    * not the linear lowering. On this data the composed relation has no
+    * recursive path compiler (PathTriple -> pair-relation evaluator).
+    * On this data the composed relation has no
     * chains, so the closure equals one composition and the oracle states
     * the join closed-form. */
   private def q97_nested_path(s: SparkSession, dir: String): DataFrame =

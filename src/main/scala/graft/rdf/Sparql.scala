@@ -41,9 +41,12 @@ import org.apache.spark.sql.functions._
   *          | GRAPH term { group }
   *          | { group } UNION { group }
   *          | { SELECT ... }               (sub-select)
-  * triple  := term path term | term ('!' pterm | '!(' pterm ('|' pterm)* ')') term
-  * path    := step ('/' step)*
-  * step    := ['^'] (pterm | '(' pterm ('|' pterm)* ')') ['*'|'+'|'?'|'{n[,[m]]}']
+  * triple  := term path term
+  * path    := seq ('|' seq)*                (SPARQL 1.1 §9.1)
+  * seq     := elt ('/' elt)*
+  * elt     := ['^'] primary ['*'|'+'|'?'|'{n[,[m]]}']
+  * primary := pterm | '!' pterm | '!(' pterm ('|' pterm)* ')' | '(' path ')'
+  *            ({0,} = *, {1,} = +, {0,1} = ?, {1} = plain)
   * pterm   := <iri> | bareword | 'a' (→ rdf:type)
   * term    := ?var | <iri> | "literal" | bareword
   * object  := term ["^^"<dt> | "@"lang]     (typed/tagged literals)
@@ -162,17 +165,6 @@ object Sparql {
 
   private sealed trait Element
   private final case class Triple(s: String, p: String, o: String) extends Element
-  /** `s (p1|p2) o` — property alternation (one hop, any listed predicate). */
-  private final case class AltTriple(s: String, preds: List[String], o: String) extends Element
-  /** `s p* o` (mod='*'), `s p+ o` (mod='+'), `s p? o` (mod='?');
-    * `preds.size > 1` closes over the union of the edge relations
-    * (`(p1|p2)*`). */
-  private final case class StarPath(s: String, preds: List[String], o: String,
-      mod: Char = '*') extends Element
-  /** `s p{lo,hi} o` range quantifier (hi None = unbounded): the DISTINCT
-    * union of exact-k-hop pairs for k in [lo, hi]. */
-  private final case class QuantPath(s: String, preds: List[String], o: String,
-      lo: Int, hi: Option[Int]) extends Element
   private final case class Opt(group: List[Element]) extends Element
   private final case class FilterCond(e: Expr) extends Element
   private final case class Graphed(g: String, group: List[Element]) extends Element
@@ -182,9 +174,6 @@ object Sparql {
   private final case class Values(names: List[String],
       rows: List[List[String]]) extends Element
   private final case class SubSelect(query: Query) extends Element
-  /** `s !(p1|p2) o` — any predicate NOT in the set (SPARQL negated
-    * property set). */
-  private final case class NegPropSet(s: String, preds: List[String], o: String) extends Element
   /** FILTER EXISTS { group } / FILTER NOT EXISTS { group } — semi/anti
     * join of the current bindings against the inner group. `minus` marks
     * the MINUS form, whose no-shared-variable semantics differ (SPARQL
@@ -192,11 +181,9 @@ object Sparql {
     * MINUS removes nothing — NOT EXISTS would remove everything). */
   private final case class Exists(group: List[Element], negated: Boolean,
       minus: Boolean = false) extends Element
-  /** Fully-general property-path triple — the recursive grammar
-    * (SPARQL 1.1 §9.1): nested groups, sequence/alternation under
-    * modifiers, inverses of groups. Linear paths lower to the
-    * specialized elements above; only genuinely-nested shapes reach
-    * this node and its recursive pair-relation compiler. */
+  /** `s path o` for one property-path step that is not a plain or
+    * inverted link — compiled to a (src, dst) pair relation by
+    * [[pathPairs]]. */
   private final case class PathTriple(s: String, path: PathAst, o: String) extends Element
 
   /** Property-path AST (§9.1). */
@@ -404,44 +391,31 @@ object Sparql {
     private def fresh(): String = { freshId += 1; s"?__path$freshId" }
 
     /** Parse the triples after one subject: `s path o (, o)* (; path o...)*`
-      * A path step may be inverted (`^p`); a predicate position may be a
-      * negated property set (`!p` / `!(p1|p2)`). */
+      * over the property-path grammar in the header, translated as
+      * SPARQL 1.1 §18.4 does: a top-level sequence splits at fresh
+      * variables, a link or an inverted link becomes a plain [[Triple]]
+      * for the BGP planner, and every other step one [[PathTriple]]. */
     private def triples(elems: scala.collection.mutable.ListBuffer[Element]): Unit = {
+      def seqSteps(e: PathAst): List[PathAst] = e match {
+        case PSeq(l, r) => seqSteps(l) ++ seqSteps(r)
+        case other => List(other)
+      }
       val s = term()
       var done = false
       while (!done) {
-        // full recursive property-path grammar (SPARQL 1.1 §9.1):
-        //   path    := seq ('|' seq)*
-        //   seq     := elt ('/' elt)*
-        //   elt     := ['^'] primary ['*'|'+'|'?'|'{n[,m]}']
-        //   primary := iri | 'a' | !set | '(' path ')'
-        // Range quantifiers equivalent to a modifier normalize to it
-        // ({0,} = *, {1,} = +, {0,1} = ?, {1} = plain).
-        val ast = pathExpr()
+        val steps = seqSteps(pathExpr())
         var moreObjects = true
         while (moreObjects) {
           val o = objTerm()
-          (ast, lowerLinearPath(ast)) match {
-            case (PNeg(preds), _) => elems += NegPropSet(s, preds, o)
-            case (_, Some(steps)) =>
-              // linear chain: compile through the specialized elements —
-              // chain through fresh intermediate variables; each step is a
-              // plain/alternation triple or a closure, inverted in place
-              // (p1/^p2*/...) — `?s (^p)* ?o` ≡ `?o p* ?s`: closures and
-              // alternations swap endpoints too
-              var subj = s
-              steps.zipWithIndex.foreach { case ((ps, inv, mod), i) =>
-                val obj = if (i == steps.size - 1) o else fresh()
-                val (from, to) = if (inv) (obj, subj) else (subj, obj)
-                elems += ((ps, mod) match {
-                  case (p :: Nil, Left(None)) => Triple(from, p, to)
-                  case (many, Left(None)) => AltTriple(from, many, to)
-                  case (many, Left(Some(m))) => StarPath(from, many, to, m)
-                  case (many, Right((lo, hi))) => QuantPath(from, many, to, lo, hi)
-                })
-                subj = obj
-              }
-            case _ => elems += PathTriple(s, ast, o) // genuinely nested
+          var subj = s
+          steps.zipWithIndex.foreach { case (step, i) =>
+            val obj = if (i == steps.size - 1) o else fresh()
+            elems += (step match {
+              case PLink(p) => Triple(subj, p, obj)
+              case PInv(PLink(p)) => Triple(obj, p, subj)
+              case other => PathTriple(subj, other, obj)
+            })
+            subj = obj
           }
           moreObjects = peek == "," && { next(); true }
         }
@@ -710,66 +684,13 @@ object Sparql {
     Bgp.Pattern(cv(t.s), cv(t.p), cv(t.o), g.map(termValue))
   }
 
-  /** Path-modifier pairs: `p*` = closure ∪ zero-length identity over every
-    * term of the (graph-scoped) store (SPARQL: a zero-length path matches
-    * each graph term with itself); `p+` = closure only; `p?` = direct
-    * edges ∪ identity. Closure via
-    * [[graft.graph.GraphOps.transitiveClosure]]. */
-  private def starPath(quads: DataFrame, sp: StarPath, graph: Option[String]): DataFrame = {
-    val scoped = graph.map(g => quads.where(col("g") === termValue(g))).getOrElse(quads)
-    val preds = sp.preds.map(termValue)
-    val edges = scoped.where(
-        if (preds.size == 1) col("p") === preds.head else col("p").isin(preds: _*))
-      .select(col("s").as("src"), col("o").as("dst"))
-    val reach =
-      if (sp.mod == '?') edges.distinct()
-      else graft.graph.GraphOps.transitiveClosure(edges).select(col("src"), col("dst"))
-    lazy val identity = scoped.select(col("s").as("src"))
-      .union(scoped.select(col("o").as("src")))
-      .distinct()
-      .select(col("src"), col("src").as("dst"))
-    val pairs =
-      if (sp.mod == '+') reach.distinct()
-      else reach.union(identity).distinct()
-    bindPathEnds(pairs, sp.s, sp.o)
-  }
-
-  /** Lower a path AST to the legacy linear step list when it IS linear —
-    * a top-level sequence whose elements are (possibly inverted, possibly
-    * modifier-wrapped) links or link-alternations. Nested shapes (groups
-    * under modifiers, inverses of sequences, alternations of sequences)
-    * return None and compile through [[pathPairs]]. */
-  private def lowerLinearPath(ast: PathAst)
-      : Option[List[(List[String], Boolean, Either[Option[Char], (Int, Option[Int])])]] = {
-    def altLinks(e: PathAst): Option[List[String]] = e match {
-      case PLink(p) => Some(List(p))
-      case PAlt(l, r) => for { a <- altLinks(l); b <- altLinks(r) } yield a ++ b
-      case _ => None
-    }
-    def base(e: PathAst): Option[(List[String], Boolean)] = e match {
-      case PInv(inner) => altLinks(inner).map((_, true))
-      case other => altLinks(other).map((_, false))
-    }
-    def step(e: PathAst)
-        : Option[(List[String], Boolean, Either[Option[Char], (Int, Option[Int])])] =
-      e match {
-        case PClosure(inner, m) => base(inner).map { case (ps, inv) => (ps, inv, Left(Some(m))) }
-        case PRangeP(inner, lo, hi) => base(inner).map { case (ps, inv) => (ps, inv, Right((lo, hi))) }
-        case other => base(other).map { case (ps, inv) => (ps, inv, Left(None)) }
-      }
-    def seqList(e: PathAst): List[PathAst] = e match {
-      case PSeq(l, r) => seqList(l) ++ seqList(r)
-      case other => List(other)
-    }
-    val steps = seqList(ast).map(step)
-    if (steps.forall(_.isDefined)) Some(steps.map(_.get)) else None
-  }
-
-  /** Recursive pair-relation compiler for nested property paths: every
-    * sub-path evaluates to a distinct (src, dst) relation; composition is
-    * an equi-join, alternation a union, closure the budgeted transitive
-    * closure, zero-length the node-identity relation over the scoped
-    * graph (SPARQL 1.1 §9.3). All operators stay relational — the same
+  /** Pair-relation compiler for property paths (SPARQL 1.1 §18.4): every
+    * sub-path evaluates to a (src, dst) relation. A link, `!(…)`, `^`,
+    * `/` (an equi-join) and `|` (a union) keep bag semantics, as their
+    * §18.4 translations to triple patterns, joins and unions do; `*`,
+    * `+`, `?` and `{n,m}` are sets. Closure is the budgeted transitive
+    * closure, zero-length the node-identity relation over every term of
+    * the scoped graph (§9.3). All operators stay relational — the same
     * shuffles a hand-written join chain would plan. */
   private def pathPairs(quads: DataFrame, ast: PathAst,
       graph: Option[String]): DataFrame = {
@@ -777,25 +698,26 @@ object Sparql {
     lazy val identity = scoped.select(col("s").as("src"))
       .union(scoped.select(col("o").as("src"))).distinct()
       .select(col("src"), col("src").as("dst"))
+    def closure(x: PathAst): DataFrame =
+      graft.graph.GraphOps.transitiveClosure(eval(x)).select(col("src"), col("dst"))
     def eval(e: PathAst): DataFrame = e match {
       case PLink(p) => scoped.where(col("p") === termValue(p))
         .select(col("s").as("src"), col("o").as("dst"))
       case PNeg(preds) => scoped.where(!col("p").isin(preds.map(termValue): _*))
         .select(col("s").as("src"), col("o").as("dst"))
       case PInv(x) => eval(x).select(col("dst").as("src"), col("src").as("dst"))
-      case PAlt(l, r) => eval(l).unionByName(eval(r)).distinct()
+      case PAlt(l, r) => eval(l).unionByName(eval(r))
       case PSeq(l, r) =>
         eval(l).alias("a").join(eval(r).alias("b"), col("a.dst") === col("b.src"))
-          .select(col("a.src").as("src"), col("b.dst").as("dst")).distinct()
-      case PClosure(x, '+') =>
-        graft.graph.GraphOps.transitiveClosure(eval(x).distinct())
-          .select(col("src"), col("dst")).distinct()
-      case PClosure(x, '*') =>
-        graft.graph.GraphOps.transitiveClosure(eval(x).distinct())
-          .select(col("src"), col("dst")).union(identity).distinct()
+          .select(col("a.src").as("src"), col("b.dst").as("dst"))
+      case PClosure(x, '+') => closure(x).distinct()
+      case PClosure(x, '*') => closure(x).union(identity).distinct()
       case PClosure(x, _) => // '?'
         eval(x).union(identity).distinct()
       case PRangeP(x, lo, hi) =>
+        // exact-k-hop pairs for k in [lo, hi], one join per level (hi is
+        // a small constant in any real query); an unbounded tail reuses
+        // the closure
         val edges = eval(x).distinct()
         def step(acc: DataFrame): DataFrame = acc.alias("a")
           .join(edges.alias("e"), col("a.dst") === col("e.src"))
@@ -809,11 +731,9 @@ object Sparql {
             levels += cur
             while (k < h) { cur = step(cur); k += 1; levels += cur }
           case None =>
-            val closure = graft.graph.GraphOps.transitiveClosure(edges)
-              .select(col("src"), col("dst"))
             levels += cur
             levels += cur.alias("a")
-              .join(closure.alias("c"), col("a.dst") === col("c.src"))
+              .join(closure(x).alias("c"), col("a.dst") === col("c.src"))
               .select(col("a.src").as("src"), col("c.dst").as("dst"))
         }
         val base = levels.reduceLeft(_ union _)
@@ -822,74 +742,19 @@ object Sparql {
     eval(ast)
   }
 
-  private def bindPathEnds(pairs: DataFrame, s: String, o: String): DataFrame = {
-    val withS =
-      if (s.startsWith("?")) pairs.withColumnRenamed("src", s.drop(1))
-      else pairs.where(col("src") === termValue(s)).drop("src")
-    if (o.startsWith("?")) withS.withColumnRenamed("dst", o.drop(1))
-    else withS.where(col("dst") === termValue(o)).drop("dst")
-  }
-
-  /** `s p{lo,hi} o`: distinct union of exact-k-hop pairs, k in [lo, hi].
-    * Bounded ranges iterate a join per level (hi is a small constant in
-    * any real query — each level is one hash join Catalyst plans like any
-    * other); unbounded tails reuse the budgeted transitive closure.
-    * Normalized forms ({0,}, {1,}, {0,1}, {1}) never reach here. */
-  private def quantPath(quads: DataFrame, qp: QuantPath, graph: Option[String]): DataFrame = {
-    val scoped = graph.map(g => quads.where(col("g") === termValue(g))).getOrElse(quads)
-    val preds = qp.preds.map(termValue)
-    val edges = scoped.where(
-        if (preds.size == 1) col("p") === preds.head else col("p").isin(preds: _*))
-      .select(col("s").as("src"), col("o").as("dst")).distinct()
-    def step(acc: DataFrame): DataFrame = acc.alias("a")
-      .join(edges.alias("e"), col("a.dst") === col("e.src"))
-      .select(col("a.src").as("src"), col("e.dst").as("dst")).distinct()
-    val levels = scala.collection.mutable.ListBuffer[DataFrame]()
-    var cur = edges
-    var k = 1
-    while (k < qp.lo) { cur = step(cur); k += 1 } // cur = exact-max(lo,1) hops
-    qp.hi match {
-      case Some(h) =>
-        levels += cur
-        while (k < h) { cur = step(cur); k += 1; levels += cur }
-      case None =>
-        // lo >= 2 here: exact-lo hops, plus lo..infinity via the closure
-        val closure = graft.graph.GraphOps.transitiveClosure(edges)
-          .select(col("src"), col("dst"))
-        levels += cur
-        levels += cur.alias("a")
-          .join(closure.alias("c"), col("a.dst") === col("c.src"))
-          .select(col("a.src").as("src"), col("c.dst").as("dst"))
+  /** Bind a pair relation's ends to the path triple's subject and object:
+    * a constant filters its end, a variable names it, and `?x path ?x`
+    * keeps the pairs with `src = dst` under one column. */
+  private def bindPathEnds(pairs: DataFrame, s: String, o: String): DataFrame =
+    if (s.startsWith("?") && s == o)
+      pairs.where(col("src") === col("dst")).select(col("src").as(s.drop(1)))
+    else {
+      val withS =
+        if (s.startsWith("?")) pairs.withColumnRenamed("src", s.drop(1))
+        else pairs.where(col("src") === termValue(s)).drop("src")
+      if (o.startsWith("?")) withS.withColumnRenamed("dst", o.drop(1))
+      else withS.where(col("dst") === termValue(o)).drop("dst")
     }
-    val base = levels.reduceLeft(_ union _)
-    val withZero = // lo == 0: the zero-length path matches each term with itself
-      if (qp.lo > 0) base
-      else base.union(scoped.select(col("s").as("src"))
-        .union(scoped.select(col("o").as("src"))).distinct()
-        .select(col("src"), col("src").as("dst")))
-    bindPathEnds(withZero.distinct(), qp.s, qp.o)
-  }
-
-  /** `s (p1|p2) o` / `s !(p1|p2) o`: a filtered scan over (or excluding)
-    * the listed predicates — the predicate set pushes down to the
-    * columnar store like any constant. */
-  private def predSetScan(quads: DataFrame, s: String, preds: List[String],
-      o: String, graph: Option[String], negated: Boolean): DataFrame = {
-    val scoped = graph.map(g => quads.where(col("g") === termValue(g))).getOrElse(quads)
-    val in = col("p").isin(preds.map(termValue): _*)
-    val base = scoped.where(if (negated) !in else in)
-    val withS = if (s.startsWith("?")) base else base.where(col("s") === termValue(s))
-    val withO = if (o.startsWith("?")) withS else withS.where(col("o") === termValue(o))
-    val selfEq = if (s.startsWith("?") && s == o) withO.where(col("s") === col("o")) else withO
-    val projections = Seq(s -> "s", o -> "o")
-      .collect { case (t, c) if t.startsWith("?") => (t.drop(1), c) }
-      .foldLeft(Vector.empty[(String, String)]) { (acc, p) =>
-        if (acc.exists(_._1 == p._1)) acc else acc :+ p
-      }
-      .map { case (v, c) => col(c).as(v) }
-    require(projections.nonEmpty, "property set pattern binds no variables")
-    selfEq.select(projections: _*)
-  }
 
   /** `namedQuads` is the store GRAPH-scoped patterns see — it differs
     * from `quads` only under FROM/FROM NAMED dataset clauses (null =
@@ -928,11 +793,7 @@ object Sparql {
       join(Bgp.bgpMeta(quads,
         triples.map(t => toPattern(t.asInstanceOf[Triple], graph)), metaVars))
     rest.foreach {
-      case sp: StarPath => join(starPath(quads, sp, graph))
-      case qp: QuantPath => join(quantPath(quads, qp, graph))
-      case pt: PathTriple => join(bindPathEnds(pathPairs(quads, pt.path, graph), pt.s, pt.o))
-      case AltTriple(s, preds, o) => join(predSetScan(quads, s, preds, o, graph, negated = false))
-      case NegPropSet(s, preds, o) => join(predSetScan(quads, s, preds, o, graph, negated = true))
+      case PathTriple(s, path, o) => join(bindPathEnds(pathPairs(quads, path, graph), s, o))
       case Exists(inner, negated, minus) =>
         val left = current.getOrElse(sys.error("FILTER EXISTS without preceding bindings"))
         val right = compileGroup(quads, inner, graph, metaVars, named)

@@ -8,6 +8,7 @@ import java.util.concurrent.atomic.AtomicReference
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LogicalPlan, Offset, Project, Sort}
+import scala.jdk.CollectionConverters._
 
 /** SPARQL 1.1 Protocol endpoint over a quads DataFrame — the engine's
   * front door, mirroring the reference's akka-http service
@@ -248,10 +249,13 @@ object SparqlEndpoint {
                   return
               }
             val accept = Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
-            if (accept.contains("text/turtle")) streamTurtle(ex, df)
-            else if (accept.contains("application/ld+json")) streamJsonLd(ex, df)
+            if (accept.contains("text/turtle"))
+              streamGraph(ex, df, "text/turtle", graft.sources.Turtle.writeStream(_, _))
+            else if (accept.contains("application/ld+json"))
+              streamGraph(ex, df, "application/ld+json", graft.sources.JsonLd.writeStream)
             else if (accept.contains("application/trig")) streamTrig(ex, df)
-            else if (accept.contains("application/rdf+xml")) streamRdfXml(ex, df)
+            else if (accept.contains("application/rdf+xml"))
+              streamGraph(ex, df, "application/rdf+xml", graft.sources.RdfXml.writeStream)
             else streamNQuads(ex, df)
           case (Some(q), _) =>
             val df =
@@ -407,46 +411,22 @@ object SparqlEndpoint {
       out.flush()
     }
 
-    /** CONSTRUCT/DESCRIBE results as prefixed Turtle, streamed: the
-      * result is sorted by (s, p) so [[graft.sources.Turtle.writeStream]]
-      * groups subject blocks in one pass over `toLocalIterator` — no
-      * driver collect. Graph provenance is flattened (Turtle has no
-      * graph term; N-Quads keeps it). */
-    private def streamTurtle(ex: HttpExchange, df: DataFrame): Unit = {
+    /** CONSTRUCT/DESCRIBE results in a subject-grouped serialization
+      * (prefixed Turtle, flat expanded JSON-LD, or RDF/XML — the legacy
+      * default of Protégé and older Jena clients, which the reference
+      * negotiates via RDF4J, `SparqlService.scala:170-201`), streamed: the
+      * result is sorted by (s, p, o) so `write` groups subject blocks in
+      * one pass over `toLocalIterator` — no driver collect. Graph
+      * provenance is flattened (none of the three has a graph term;
+      * N-Quads and TriG keep it). */
+    private def streamGraph(ex: HttpExchange, df: DataFrame, contentType: String,
+        write: (Iterator[TermRow], String => Unit) => Unit): Unit = {
       import org.apache.spark.sql.functions.col
-      ex.getResponseHeaders.set("Content-Type", "text/turtle; charset=utf-8")
+      ex.getResponseHeaders.set("Content-Type", s"$contentType; charset=utf-8")
       ex.sendResponseHeaders(200, 0)
       val out = ex.getResponseBody
-      graft.sources.Turtle.writeStream(
-        sortedTermRows(df, df.orderBy(col("s"), col("p"), col("o"))),
-        s => out.write(s.getBytes(StandardCharsets.UTF_8)))
-      out.flush()
-    }
-
-    /** Graph results as flat expanded JSON-LD (`{"@graph":[…]}`),
-      * streamed with the same sorted-subject-group contract as Turtle. */
-    private def streamJsonLd(ex: HttpExchange, df: DataFrame): Unit = {
-      import org.apache.spark.sql.functions.col
-      ex.getResponseHeaders.set("Content-Type", "application/ld+json; charset=utf-8")
-      ex.sendResponseHeaders(200, 0)
-      val out = ex.getResponseBody
-      graft.sources.JsonLd.writeStream(
-        sortedTermRows(df, df.orderBy(col("s"), col("p"), col("o"))),
-        s => out.write(s.getBytes(StandardCharsets.UTF_8)))
-      out.flush()
-    }
-
-    /** Graph results as RDF/XML — the legacy default of Protégé / older
-      * Jena clients (reference negotiates it via RDF4J,
-      * `SparqlService.scala:170-201`); same sorted-subject-group
-      * streaming contract as Turtle. */
-    private def streamRdfXml(ex: HttpExchange, df: DataFrame): Unit = {
-      import org.apache.spark.sql.functions.col
-      ex.getResponseHeaders.set("Content-Type", "application/rdf+xml; charset=utf-8")
-      ex.sendResponseHeaders(200, 0)
-      val out = ex.getResponseBody
-      graft.sources.RdfXml.writeStream(
-        sortedTermRows(df, df.orderBy(col("s"), col("p"), col("o"))),
+      val idx = df.columns.zipWithIndex.toMap
+      write(df.orderBy(col("s"), col("p"), col("o")).toLocalIterator().asScala.map(termRow(idx, _)),
         s => out.write(s.getBytes(StandardCharsets.UTF_8)))
       out.flush()
     }
@@ -459,40 +439,28 @@ object SparqlEndpoint {
       ex.sendResponseHeaders(200, 0)
       val out = ex.getResponseBody
       val idx = df.columns.zipWithIndex.toMap
-      val it = df.orderBy(col("g"), col("s"), col("p"), col("o")).toLocalIterator()
-      def strCol(row: org.apache.spark.sql.Row, c: String): String =
-        idx.get(c).map(i => if (row.isNullAt(i)) null else row.getString(i)).orNull
-      val rows = new Iterator[(String, String, String, String, Byte, String, String)] {
-        def hasNext: Boolean = it.hasNext
-        def next(): (String, String, String, String, Byte, String, String) = {
-          val row = it.next()
-          (row.getString(idx("g")), row.getString(idx("s")), row.getString(idx("p")),
-            row.getString(idx("o")),
-            idx.get("oKind").map(row.getByte).getOrElse(Quad.LITERAL),
-            strCol(row, "oDt"), strCol(row, "oLang"))
+      val rows = df.orderBy(col("g"), col("s"), col("p"), col("o")).toLocalIterator().asScala
+        .map { row =>
+          val (s, p, o, kind, dt, lang) = termRow(idx, row)
+          (row.getString(idx("g")), s, p, o, kind, dt, lang)
         }
-      }
       graft.sources.Turtle.writeTrigStream(rows,
         s => out.write(s.getBytes(StandardCharsets.UTF_8)))
       out.flush()
     }
 
-    /** Shared (s,p,o,kind,dt,lang) row iterator over an ordered frame. */
-    private def sortedTermRows(df: DataFrame,
-        ordered: DataFrame): Iterator[(String, String, String, Byte, String, String)] = {
-      val idx = df.columns.zipWithIndex.toMap
-      val it = ordered.toLocalIterator()
-      def strCol(row: org.apache.spark.sql.Row, c: String): String =
+    /** (s, p, o, kind, dt, lang): the row the graph serializers take. */
+    private type TermRow = (String, String, String, Byte, String, String)
+
+    /** One result row as a [[TermRow]]; `idx` maps the frame's column
+      * names to positions, and a missing `oKind` reads as a literal, a
+      * missing `oDt`/`oLang` as null. */
+    private def termRow(idx: Map[String, Int], row: org.apache.spark.sql.Row): TermRow = {
+      def strCol(c: String): String =
         idx.get(c).map(i => if (row.isNullAt(i)) null else row.getString(i)).orNull
-      new Iterator[(String, String, String, Byte, String, String)] {
-        def hasNext: Boolean = it.hasNext
-        def next(): (String, String, String, Byte, String, String) = {
-          val row = it.next()
-          (row.getString(idx("s")), row.getString(idx("p")), row.getString(idx("o")),
-            idx.get("oKind").map(row.getByte).getOrElse(Quad.LITERAL),
-            strCol(row, "oDt"), strCol(row, "oLang"))
-        }
-      }
+      (row.getString(idx("s")), row.getString(idx("p")), row.getString(idx("o")),
+        idx.get("oKind").map(row.getByte).getOrElse(Quad.LITERAL),
+        strCol("oDt"), strCol("oLang"))
     }
 
     /** CONSTRUCT results as N-Quads lines, streamed. Expects the
@@ -506,16 +474,11 @@ object SparqlEndpoint {
       val it = df.toLocalIterator()
       while (it.hasNext) {
         val row = it.next()
-        val s = row.getString(idx("s"))
-        val p = row.getString(idx("p"))
-        val o = row.getString(idx("o"))
+        val (s, p, o, kind, dt, lang) = termRow(idx, row)
         val g = row.getString(idx("g"))
-        val kind = idx.get("oKind").map(row.getByte).getOrElse(Quad.LITERAL)
-        def strCol(c: String): String =
-          idx.get(c).map(i => if (row.isNullAt(i)) null else row.getString(i)).orNull
         // shared N-Triples term rule: ^^datatype / @lang survive;
         // blank-node subjects/graphs keep their _: label (never <_:b>)
-        val oTerm = graft.sources.NTriples.fmtTerm(o, kind, strCol("oDt"), strCol("oLang"))
+        val oTerm = graft.sources.NTriples.fmtTerm(o, kind, dt, lang)
         val sTerm = if (s.startsWith("_:")) s else s"<$s>"
         val gTerm = if (g.startsWith("_:")) g else s"<$g>"
         w(s"$sTerm <$p> $oTerm $gTerm .\n")

@@ -179,9 +179,8 @@ class SparqlFuzzSpec extends SparkSpec {
   // Reference: a ~30-line pair-relation evaluator straight off SPARQL 1.1
   // §9.3 — link = (s,o) pairs, ^ = swap, / = compose, | = union,
   // +/* = driver fixpoint closure, ?/* add the zero-length identity over
-  // every term of the graph. Compared under DISTINCT (multiplicity of
-  // non-closure paths is bag-semantics and spec-murky; the pair SETS are
-  // not).
+  // every term of the graph. Compared under DISTINCT: the reference
+  // computes pair sets, and SparqlSpec pins the bag/set multiplicities.
   private sealed trait PathE
   private case class PLk(p: String) extends PathE
   private case class PNeg(e: PathE) extends PathE
@@ -266,12 +265,19 @@ class SparqlFuzzSpec extends SparkSpec {
       val p = randomPath(if (i % 3 == 0) 3 else 2)
       val want = refPathPairs(data, p)
       val clue = s"path: ${renderPath(p)}\nstore: ${data.sortBy(_.toString)}\n"
-      if (rnd.nextInt(3) == 0) { // anchored subject
+      val mode = rnd.nextInt(4)
+      if (mode == 0) { // anchored subject
         val s0 = subs(rnd.nextInt(subs.size))
         val q = s"SELECT DISTINCT ?b WHERE { <$s0> ${renderPath(p)} ?b . }"
         val got = Sparql.select(quads, q).collect().map(_.getString(0)).toSet
         withClue(s"anchored $s0; $clue") {
           got shouldBe want.collect { case (`s0`, b) => b }
+        }
+      } else if (mode == 1) { // both ends the same variable
+        val q = s"SELECT DISTINCT ?a WHERE { ?a ${renderPath(p)} ?a . }"
+        val got = Sparql.select(quads, q).collect().map(_.getString(0)).toSet
+        withClue(s"same-variable ends; $clue") {
+          got shouldBe want.filter { case (a, b) => a == b }.map(_._1)
         }
       } else {
         val q = s"SELECT DISTINCT ?a ?b WHERE { ?a ${renderPath(p)} ?b . }"
@@ -438,7 +444,7 @@ class SparqlFuzzSpec extends SparkSpec {
             Option(r.get(i)).map(_.toString).orNull).toList).toSeq
         val want = joined.map(b => proj.map(v => b.getOrElse(v, null)).toList)
         val sortKey = (row: List[String]) =>
-          row.map(v => if (v == null) " " else v).mkString("")
+          row.map(v => if (v == null) "\u0000" else v).mkString("\u0001")
         withClue(s"query: $q\nstore: ${data.sortBy(_.toString)}\n") {
           got.sortBy(sortKey) shouldBe want.sortBy(sortKey)
         }
@@ -612,7 +618,7 @@ class SparqlFuzzSpec extends SparkSpec {
           Option(r.get(i)).map(_.toString).orNull).toList).toSeq
       val want = ref.map(b => proj.map(v => b.getOrElse(v, null)).toList)
       val sortKey = (row: List[String]) =>
-        row.map(v => if (v == null) " " else v).mkString("")
+        row.map(v => if (v == null) "\u0000" else v).mkString("\u0001")
       withClue(s"query: $q\nstore: ${data.sortBy(_.toString)}\n") {
         got.sortBy(sortKey) shouldBe want.sortBy(sortKey)
       }

@@ -802,11 +802,42 @@ class SparqlSpec extends SparkSpec {
     q("(<p>/<q>)?") shouldBe Set("a", "b")
   }
 
-  it should "still lower linear paths to the specialized plan shapes" in {
-    // sanity: the reference guard shape keeps parsing and answering
+  it should "answer the reference guard shape (a closure step, then a link)" in {
     Sparql.select(quads,
       """SELECT ?x WHERE { ?x <knows>*/<name> ?n . FILTER(?n = "Bob") }""")
       .as[String].collect().toSet shouldBe Set("alice", "bob")
+  }
+
+  it should "bind a path whose two ends are the same variable" in {
+    val cycle = Seq(("a", "p", "b"), ("b", "p", "a"), ("b", "p", "c"))
+      .map { case (s, p, o) => (s, p, o, 2.toByte, null: String, null: String, "g") }
+      .toDF("s", "p", "o", "oKind", "oDt", "oLang", "g")
+    Sparql.select(cycle, "SELECT ?x WHERE { ?x <p>+ ?x }")
+      .as[String].collect().sorted.toSeq shouldBe Seq("a", "b")
+  }
+
+  it should "keep bag semantics for | / ^ !(…) and set semantics for * + ? {n,m}" in {
+    // two p-routes from a to c, and a q edge parallel to a -p-> b
+    val diamond = Seq(("a", "p", "b"), ("a", "p", "d"), ("b", "p", "c"),
+        ("d", "p", "c"), ("a", "q", "b"))
+      .map { case (s, p, o) => (s, p, o, 2.toByte, null: String, null: String, "g") }
+      .toDF("s", "p", "o", "oKind", "oDt", "oLang", "g")
+    def rows(path: String): Long =
+      Sparql.select(diamond, s"SELECT ?x ?y WHERE { ?x $path ?y }").count()
+    // SPARQL 1.1 §18.4: a sequence is a join, an alternative a union
+    rows("<p>/<p>") shouldBe 2 // (a, c) once per route
+    rows("((<p>/<p>)|(<p>/<p>))") shouldBe 4 // twice the rows of <p>/<p>
+    rows("(<p>|<q>)") shouldBe 5 // (a, b) through p and through q
+    rows("((<p>|<q>)|<q>)") shouldBe 6
+    rows("^<p>") shouldBe 4
+    rows("^(<p>/<p>)") shouldBe 2
+    rows("!(<r>)") shouldBe 5 // (a, b) under two predicates
+    rows("(!(<r>)|<q>)") shouldBe 6
+    // closures and ranges are sets of pairs
+    rows("(<p>|<q>)+") shouldBe 5 // (a,b) (a,d) (b,c) (d,c) (a,c)
+    rows("(<p>|<q>){1,2}") shouldBe 5
+    rows("(<p>|<q>)*") shouldBe 9 // the five above and four zero-length pairs
+    rows("(<p>/<p>)?") shouldBe 5 // (a, c) once, and four zero-length pairs
   }
 
   "path quantifiers" should "expand {n}, {n,m} and {n,} structurally" in {
