@@ -341,9 +341,6 @@ object Scc {
           free(remainingIds); remaining = r2c; remainingIds = r2cIds
         }
         free(rmIds)
-        if (sys.env.contains("GRAFT_SCC_DEBUG"))
-          println(s"SCCDBG round=$round contractPass=$pass " +
-            s"contracting=$contracting t=${System.nanoTime() / 1000000000}s")
       }
 
       // 2. forward/backward reach-min fixpoints, accelerated by DOUBLING
@@ -428,16 +425,9 @@ object Scc {
           .withColumnRenamed("nb", "b").withColumnRenamed("nf", "f")
           .withColumnRenamed("npb", "pb").withColumnRenamed("npf", "pf"))
         changed = next.where(col("chg")).take(1).nonEmpty
-        if (sys.env.contains("GRAFT_SCC_DEBUG") && iter % 10 == 0)
-          println(s"SCCDBG   iter=$iter t=${System.nanoTime() / 1000000000}s")
         free(stateIds)
         state = next.drop("chg"); stateIds = nextIds
       }
-      if (sys.env.contains("GRAFT_SCC_DEBUG"))
-        println(s"SCCDBG round=$round innerIters=$iter " +
-          s"verts=${verts.count()} parts=${state.select("part").distinct().count()} " +
-          s"pivotSccSizes=${state.join(state.groupBy(col("part")).agg(min(col("b")).as("pm")), Seq("part"))
-            .where(col("b") === col("pm") && col("f") === col("pm")).count()}")
 
       // 3. split: pivot key per part = min b (the part's key-minimum
       // vertex reaches at least itself); emit SCC(pivot), route the

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Prefix-filtered set-similarity join (PPJoin family: Chaudhuri et al.
   * ICDE 2006 prefix filter; Xiao et al. WWW 2008 positional filter).
@@ -121,9 +122,11 @@ object SetSimJoin {
     val freq = pinned.select(explode(col("toks")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("df"))
       .as[(String, Long)].collect()
-    // dense ids in (df, tok) order — same total order as the join path
-    val ordered = freq.sortBy { case (t, d) => (d, t) }
-    val dict = new java.util.HashMap[String, Long](ordered.length * 2)
+    // dense ids in (df, tok) order — same total order as the join path,
+    // whose sort compares tokens as unsigned UTF-8 bytes (UTF8String),
+    // not as UTF-16 code units (they differ on non-BMP characters)
+    val ordered = freq.sortBy { case (t, d) => (d, UTF8String.fromString(t)) }
+    val dict = new java.util.HashMap[String, java.lang.Long](ordered.length * 2)
     var i = 0L
     ordered.foreach { case (t, _) => dict.put(t, i); i += 1 }
     val dictB = spark.sparkContext.broadcast(dict)
@@ -131,7 +134,11 @@ object SetSimJoin {
       val m = dictB.value
       val arr = new Array[Long](toks.length)
       var j = 0
-      toks.foreach { t => arr(j) = m.get(t); j += 1 }
+      toks.foreach { t =>
+        val tid = m.get(t)
+        if (tid == null) throw new IllegalStateException(s"token not in the dictionary: $t")
+        arr(j) = tid; j += 1
+      }
       java.util.Arrays.sort(arr)
       arr
     }

@@ -48,24 +48,31 @@ object QuadStore {
   def guardAgainstNegations(added: DataFrame, negations: DataFrame): DataFrame =
     added.join(negations.select("s", "p", "o").distinct(), Seq("s", "p", "o"), "left_anti")
 
-  /** Apply a diff to a store snapshot (batch MERGE semantics of T2).
+  /** Apply a diff to a store version (batch MERGE semantics of T2) and
+    * return the new version committed ([[commit]]: one job, right-sized,
+    * planned from its measured size). This is the one way a store version
+    * is made from a diff — the pipeline's batch step and enrichers, SPARQL
+    * UPDATE, write-back routing and sync deltas all go through it — so a
+    * version never carries the anti-join/union lineage of the versions
+    * before it.
     * NB: a using-columns join reorders output columns (keys first), so both
     * union inputs are re-projected to the store's column order explicitly. */
   def applyDiff(store: DataFrame, d: QuadDiff): DataFrame = {
     val cols = store.columns.map(col).toSeq
-    store.join(d.removed, key, "left_anti").select(cols: _*)
-      .unionByName(d.added.select(cols: _*))
+    commit(store.join(d.removed, key, "left_anti").select(cols: _*)
+      .unionByName(d.added.select(cols: _*)))
   }
 
-  /** Materialize one store version: computed once, split into as many
-    * partitions as its measured bytes fill at Spark's advisory partition
-    * size, and planned from its measured size and row count (see
-    * [[org.apache.spark.sql.GraftSparkInternals.commit]]). Every store
-    * version the pipeline or the endpoint serves goes through here; a raw
+  /** Commit a store version that arrives from outside rather than from
+    * [[applyDiff]] (a parquet read, the store an endpoint starts or
+    * refreshes with): materialized once, split into as many partitions as
+    * its measured bytes fill at Spark's advisory partition size, and
+    * planned from its measured size and row count (see
+    * [[org.apache.spark.sql.GraftSparkInternals.commit]]). A raw
     * `localCheckpoint` of a store keeps the partitions of every union
     * input and a size estimate multiplied up through the joins below it,
     * which plans every BGP join as a shuffle join. Committing a committed
-    * version is a no-op. */
+    * version (anything [[applyDiff]] returned) is a no-op. */
   def commit(store: DataFrame): DataFrame = GraftSparkInternals.commit(store)
 
   /** Persist a store partitioned by graph; a later replace of one graph is

@@ -742,6 +742,15 @@ object Sparql {
     eval(ast)
   }
 
+  /** Whether every solution of `group` binds every variable it mentions:
+    * no OPTIONAL, UNION, BIND, VALUES, sub-select or SERVICE can leave one
+    * unbound. */
+  private def alwaysBinds(group: List[Element]): Boolean = group.forall {
+    case _: Triple | _: PathTriple | _: FilterCond | _: Exists => true
+    case Graphed(_, inner) => alwaysBinds(inner)
+    case _ => false
+  }
+
   /** Bind a pair relation's ends to the path triple's subject and object:
     * a constant filters its end, a variable names it, and `?x path ?x`
     * keeps the pairs with `src = dst` under one column. */
@@ -801,11 +810,6 @@ object Sparql {
         // the shared VARIABLES only (see dropDupMeta note)
         val shared = left.columns.intersect(right.columns)
           .filterNot(isMetaCol).toSeq
-        // Caveat: null bindings from OPTIONAL follow SQL join-key
-        // semantics here (a null never matches), whereas SPARQL
-        // compatibility treats an UNBOUND variable as compatible with
-        // anything — OPTIONAL-inside-MINUS patterns may keep rows SPARQL
-        // would drop. The reference's guard queries never combine them.
         if (shared.isEmpty) {
           // MINUS with disjoint variable domains removes nothing: keep
           // `left` untouched. FILTER (NOT) EXISTS without shared
@@ -818,8 +822,29 @@ object Sparql {
             if (!keepAll) current = Some(left.limit(0))
           }
         }
-        else
-          current = Some(left.join(right, shared, if (negated) "left_anti" else "left_semi"))
+        else {
+          val how = if (negated) "left_anti" else "left_semi"
+          // an unbound variable (an OPTIONAL's null) is compatible with any
+          // value (SPARQL 1.1 §18.5; EXISTS substitutes bound values only),
+          // and MINUS also needs one shared variable bound on both sides:
+          // a null-tolerant match, which no equi-join expresses
+          val r = right.select(shared.map(c => col(c).as(s"__x_$c")): _*)
+          def x(c: String) = col(s"__x_$c")
+          val compatible = shared.map(c =>
+            col(c).isNull || x(c).isNull || col(c) === x(c)).reduce(_ && _)
+          val overlap =
+            if (minus) shared.map(c => col(c).isNotNull && x(c).isNotNull).reduce(_ || _)
+            else lit(true)
+          def tolerant(df: DataFrame) = df.join(r, compatible && overlap, how)
+          val bound = shared.map(c => col(c).isNotNull).reduce(_ && _)
+          current = Some(
+            if (!alwaysBinds(inner)) tolerant(left)
+            else if (alwaysBinds(group)) left.join(right, shared, how)
+            // only solutions with an unbound shared variable leave the
+            // equi-join
+            else left.where(bound).join(right, shared, how)
+              .unionByName(tolerant(left.where(!bound))))
+        }
       case SubSelect(q) => join(compileQuery(quads, q, named))
       case Service(url, silent, raw) =>
         // SPARQL 1.1 federation: ship the inner group to the remote
@@ -1637,23 +1662,15 @@ object Sparql {
     else {
       // ;-sequenced request: run ops against a running snapshot, then
       // net-diff so cancelling add/remove pairs drop out of the result.
-      // Each statement COMMITS (localCheckpoint): applyDiff layers an
-      // anti-join + union over the prior store, and statements like ADD
-      // read the snapshot more than once — left as lineage, the plan
-      // tree compounds per statement (a 4-statement sequence reached
-      // 157k physical nodes and q93's dump was 850k lines). Truncating
-      // per statement keeps planning O(statement) like the reference's
-      // per-update store versions, at one bounded materialization each.
-      // capped-stats checkpoints: statements join the snapshot with
-      // itself (ADD/COPY read it multiple times), so raw origin-stats
-      // inheritance would compound sizeInBytes per statement
-      import org.apache.spark.sql.GraftSparkInternals.CappedCheckpoint
-      var snapshot = QuadStore.applyDiff(store, first).localCheckpointCapped
+      // Each statement's version is committed by applyDiff, so the next
+      // statement plans against a flat version with measured statistics
+      // (like the reference's per-update store versions), not against the
+      // lineage of every statement before it.
+      var snapshot = QuadStore.applyDiff(store, first)
       while (p.peek == ";") {
         p.next()
         if (p.peek.nonEmpty)
           snapshot = QuadStore.applyDiff(snapshot, singleUpdateDiff(snapshot, p))
-            .localCheckpointCapped
       }
       QuadStore.diff(store, snapshot)
     }
@@ -1807,7 +1824,7 @@ object Sparql {
   }
 
   /** Convenience: parse an update, evaluate, apply — returns the new
-    * store snapshot. */
+    * store version, committed. */
   def update(store: DataFrame, updateText: String): DataFrame =
     QuadStore.applyDiff(store, updateDiff(store, updateText))
 }

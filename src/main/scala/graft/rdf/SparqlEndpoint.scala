@@ -289,8 +289,8 @@ object SparqlEndpoint {
               respond(ex, 400, "text/plain", s"malformed update: ${e.getMessage}")
               return
           }
-        // the new snapshot commits its version before the swap, so a later
-        // update's WHERE doesn't re-evaluate a deep applyDiff chain
+        // applyDiff returns the new version committed: the snapshot's own
+        // commit runs no job
         ref.set(new Snapshot(QuadStore.applyDiff(ref.get.quads, diff)))
         true
       }

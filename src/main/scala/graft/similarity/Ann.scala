@@ -60,7 +60,9 @@ object Ann {
     * Fast path: with y = |raw|·1e9 and t = y + 0.5, the accumulated
     * double error versus the exact decimal value is < 2e-7 (one
     * multiplication and one addition at magnitude ≤ ~1e9), so whenever
-    * t sits ≥ 1e-4 away from an integer, n = ⌊t⌋ is provably the exact
+    * t sits ≥ 1e-4 away from an integer (and t < 1e11, i.e. |raw| below
+    * 100, where the error stays below 2e-5; every caller passes a
+    * cosine in [-1, 1]), n = ⌊t⌋ is provably the exact
     * HALF_UP digit and n / 1e9 — an exact-operand IEEE division (both n
     * and 1e9 are exactly representable) — is the correctly-rounded
     * double of n·10⁻⁹, the same value BigDecimal's toDouble returns.
@@ -75,7 +77,7 @@ object Ann {
     val t = a * 1e9 + 0.5
     val n = math.floor(t)
     val d = t - n
-    if (d > 1e-4 && d < 1 - 1e-4 && t < 4.5e15) {
+    if (d > 1e-4 && d < 1 - 1e-4 && t < 1e11) {
       val r = n / 1e9
       // BigDecimal has no negative zero: a negative value rounding to
       // zero must come back as +0.0, not -0.0

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
 import graft.rdf.{Quad, QuadDiff, QuadStore}
 
@@ -18,8 +18,7 @@ import graft.rdf.{Quad, QuadDiff, QuadStore}
   * computes the replace-diff against the store, applies enrichers in the
   * reference's fixed order, and commits graph-partitioned output. The
   * debounce stage (T3, reference DelayedBatch 10 s quiet period) maps to
-  * the processing-time trigger; an exact-quiet-period variant is provided
-  * via flatMapGroupsWithState in [[Debounce]].
+  * the processing-time trigger.
   */
 object QuadPipeline {
 
@@ -41,15 +40,15 @@ object QuadPipeline {
     * This is the exact batch analogue of Pipeline.addDocumentToRepository
     * followed by the enricher flow.
     *
-    * Every store version is committed ([[QuadStore.commit]]): the one after
-    * the batch's replace-diff and the one after each enricher. An enricher
-    * therefore scans one flat, right-sized version with measured
-    * statistics, not the anti-join/union chain of every earlier step, and
-    * the returned store is materialized. An enricher's additions keep the
-    * store a set: they are de-duplicated and anti-joined against the
-    * version the enricher read (an enricher re-deriving a quad it emitted
-    * in an earlier batch adds nothing), and a quad it both adds and removes
-    * stays. */
+    * Each step makes its store version with [[QuadStore.applyDiff]], which
+    * returns it committed: the version after the batch's replace-diff and
+    * the one after each enricher. An enricher therefore scans one flat,
+    * right-sized version with measured statistics, not the anti-join/union
+    * chain of every earlier step, and the returned store is committed. An
+    * enricher's additions keep the store a set: they are de-duplicated and
+    * anti-joined against the version the enricher read (an enricher
+    * re-deriving a quad it emitted in an earlier batch adds nothing), and a
+    * quad it both adds and removes stays. */
   def processBatch(
       store: DataFrame,
       batchQuads: DataFrame,
@@ -64,14 +63,14 @@ object QuadPipeline {
     val removed = scoped.join(batchQuads, key, "left_anti")
     val added = QuadStore.guardAgainstNegations(added0, negations)
     var diff = QuadDiff(added.select(cols: _*), removed.select(cols: _*))
-    var cur = QuadStore.commit(QuadStore.applyDiff(store, diff))
+    var cur = QuadStore.applyDiff(store, diff)
     enrichers.foreach { e =>
       val d = e(cur, diff)
       val add = QuadStore.guardAgainstNegations(d.added.select(cols: _*).distinct(), negations)
       val guarded = QuadDiff(
         add.join(cur, key, "left_anti").select(cols: _*),
         d.removed.select(cols: _*).join(add, key, "left_anti").select(cols: _*))
-      cur = QuadStore.commit(QuadStore.applyDiff(cur, guarded))
+      cur = QuadStore.applyDiff(cur, guarded)
       diff = diff.union(guarded)
     }
     (cur, diff)
@@ -86,7 +85,13 @@ object QuadPipeline {
     * partitions are not read back, not rewritten, and stay byte-identical
     * — the property a 100 TB store needs from a per-10s micro-batch sink
     * (the reference rewrites per-graph too: replaceGraph in
-    * `core/src/main/com/thymeflow/rdf/RepositoryLoader.scala`). */
+    * `core/src/main/com/thymeflow/rdf/RepositoryLoader.scala`).
+    *
+    * `onStore` receives the batch's new version as [[processBatch]]
+    * returned it: committed, so it lives in block storage and a consumer
+    * serving it (a SPARQL endpoint swapping its snapshot) never reads the
+    * partition files a later batch rewrites. No parquet is read back after
+    * the write. */
   def run(
       spark: SparkSession,
       quadStream: DataFrame,
@@ -110,8 +115,8 @@ object QuadPipeline {
         val touched = diff.added.select("g").union(diff.removed.select("g"))
           .distinct().as[String].collect()
         if (touched.nonEmpty) {
-          // `next` is committed: the slice reads its in-memory blocks, not
-          // the partition files the write below replaces
+          // `next` is committed: the slice reads its blocks, not the
+          // partition files the write below replaces
           val touchedNext = next.where(col("g").isin(touched.toSeq: _*))
           val stillPresent = touchedNext.select("g").distinct().as[String].collect().toSet
           if (stillPresent.nonEmpty) QuadStore.write(touchedNext, storePath)
@@ -123,51 +128,10 @@ object QuadPipeline {
                 .escapePathName(g))
             if (fs.exists(dir)) fs.delete(dir, true)
           }
-          // publish the refreshed store to any live consumer (e.g. a
-          // SPARQL endpoint swapping its served snapshot — the
-          // reference's pipeline->repository->SparqlService shape).
-          // The commit PINS the snapshot in block storage: the next
-          // micro-batch deletes/rewrites partition directories, and a
-          // lazy file-backed plan served concurrently would hit
-          // FileNotFoundException / mixed-version reads. (At real
-          // cluster scale the equivalent is an MVCC manifest layout;
-          // for a served store the working set is resident either way.)
-          onStore(QuadStore.commit(spark.read.schema(Quad.schema).parquet(storePath)))
+          // publish the new version to any live consumer (the reference's
+          // pipeline -> repository -> SparqlService shape)
+          onStore(next)
         }
-      }
-  }
-}
-
-/** Exact debounce/conflation (reference `core/src/main/com/thymeflow/
-  * enricher/DelayedBatch.scala:15-131`): accumulate diffs per key, emit only
-  * after `quietMs` of processing-time silence, merging diffs associatively
-  * while waiting. */
-object Debounce {
-
-  final case class Keyed(key: String, payload: String)
-  final case class Buffered(payloads: Seq[String])
-
-  /** flatMapGroupsWithState flush-after-quiet: returns the conflated batch
-    * per key once no new element arrived for quietMs. */
-  def debounced(
-      ds: org.apache.spark.sql.Dataset[Keyed],
-      quietMs: Long): org.apache.spark.sql.Dataset[Buffered] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[Seq[String], Buffered](
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-        (_: String, values: Iterator[Keyed], state: GroupState[Seq[String]]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption.map(Buffered(_)).iterator
-            state.remove()
-            out
-          } else {
-            val merged = state.getOption.getOrElse(Seq.empty) ++ values.map(_.payload)
-            state.update(merged)
-            state.setTimeoutDuration(quietMs)
-            Iterator.empty
-          }
       }
   }
 }

@@ -33,7 +33,8 @@ object SyncBridge {
       store.limit(0),
       if (removedGraphs.isEmpty) store.limit(0)
       else store.filter(col("g").isin(removedGraphs: _*)))
-    val afterRemove = QuadStore.applyDiff(store, removalDiff)
+    val afterRemove =
+      if (removedGraphs.isEmpty) store else QuadStore.applyDiff(store, removalDiff)
     val batch =
       if (docs.isEmpty) afterRemove.limit(0)
       else convert(docs.toDS()).toDF().select(afterRemove.columns.map(col): _*)

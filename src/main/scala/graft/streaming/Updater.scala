@@ -19,13 +19,8 @@ object Updater {
   val NegationGraph = "graft:negations"
 
   final case class UpdateResult(
-      store: DataFrame, // store after the update
-      negations: DataFrame, // new negation quads (for the J5 guard)
-      rejectedAdds: DataFrame) // structurally EMPTY: every non-writable
-      // addition is redirected to the user graph (the reference's
-      // "failures land in the user graph" rule), so nothing is ever
-      // rejected outright; the field keeps the three-way result shape
-      // for callers that distinguish redirection policies
+      store: DataFrame, // store after the update, committed
+      negations: DataFrame) // new negation quads (for the J5 guard)
 
   /** @param writableGraphs graphs whose owning source accepts writes; the
     *        reference's FileSynchronizer-style sources refuse
@@ -34,38 +29,30 @@ object Updater {
       store: DataFrame,
       diff: QuadDiff,
       writableGraphs: Set[String]): UpdateResult = {
-    val writable = typedLit(writableGraphs.toSeq)
+    val owned = array_contains(typedLit(writableGraphs.toSeq), col("g")) ||
+      col("g") === UserGraph
     // additions: writable graphs keep their graph; everything else lands
     // in the user graph (reference: "failures land in the user graph")
-    val adds = diff.added
-      .withColumn("g",
-        when(array_contains(writable, col("g")) || col("g") === UserGraph, col("g"))
-          .otherwise(lit(UserGraph)))
+    val adds = diff.added.withColumn("g", when(owned, col("g")).otherwise(lit(UserGraph)))
     // removals: allowed on writable graphs and the user graph; a removal
     // on a read-only graph cannot be applied at the source -> record a
     // negation statement instead
-    val removable = diff.removed
-      .where(array_contains(writable, col("g")) || col("g") === UserGraph)
-    val failedRemovals = diff.removed
-      .where(!(array_contains(writable, col("g")) || col("g") === UserGraph))
-    val negations = failedRemovals
+    val negations = diff.removed.where(!owned)
       .select(col("s"), col("p"), col("o"), col("oKind"), col("oDt"), col("oLang"))
       .distinct()
       .withColumn("g", lit(NegationGraph))
       .select(store.columns.map(col): _*)
-    val applied = QuadStore.applyDiff(store,
-      QuadDiff(adds.unionByName(negations), removable))
-    // suppressed immediately as well: negated statements leave the store.
-    // The probe side is DISTINCT on (s,p,o): `negations` dedupes on six
-    // columns, so two negation variants sharing (s,p,o) (different
-    // oLang/oDt) would otherwise fan the join out and duplicate every
-    // surviving NegationGraph row for that key on each update
-    val guarded = applied.join(
-      negations.select(col("s"), col("p"), col("o")).distinct()
-        .withColumn("__neg", lit(1)),
-      Seq("s", "p", "o"), "left_outer")
-      .where(col("__neg").isNull || col("g") === NegationGraph)
-      .drop("__neg")
-    UpdateResult(guarded, negations, diff.added.limit(0))
+    // negated statements leave the store at once: additions under a
+    // negated (s,p,o) are dropped and the store's copies outside the
+    // negation graph are removed. Both are semi/anti joins on the key, so
+    // two negation variants sharing (s,p,o) (different oLang/oDt) fan
+    // nothing out
+    val negated = negations.select("s", "p", "o")
+    val spo = Seq("s", "p", "o")
+    val next = QuadStore.applyDiff(store, QuadDiff(
+      added = adds.join(negated, spo, "left_anti").unionByName(negations),
+      removed = diff.removed.where(owned).unionByName(
+        store.join(negated, spo, "left_semi").where(col("g") =!= NegationGraph))))
+    UpdateResult(next, negations)
   }
 }

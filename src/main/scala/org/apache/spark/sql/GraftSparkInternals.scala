@@ -31,7 +31,7 @@ import org.apache.spark.sql.internal.SQLConf
   * broadcast decision cares about) sit below the cap untouched. Row
   * counts and column stats pass through unchanged.
   *
-  * [[commit]] goes further for frames that are read many times (a served
+  * [[commit]] goes further for frames that are read many times (a
   * quad-store version): it MEASURES the materialized rows and sizes the
   * partitions from the measurement.
   */
@@ -71,18 +71,20 @@ object GraftSparkInternals {
     }
   }
 
-  /** Materialize `df` once, right-sized and with measured statistics.
+  /** Materialize `df` once, right-sized and with measured statistics,
+    * in exactly one job.
     *
-    * One job computes the rows into local-checkpoint blocks and measures
+    * That job computes the rows into local-checkpoint blocks and measures
     * their count and UnsafeRow bytes. The partition count becomes
     * `max(1, ceil(bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes))`
     * (the size AQE already aims a shuffle partition at); when that differs
-    * from the computed count, a second job re-blocks the in-memory rows
-    * (coalesce; a round-robin shuffle only to grow). The returned plan
-    * carries the measured `sizeInBytes` and row count, so Catalyst plans
-    * joins against it from its real size instead of from an estimate
-    * inherited through the joins and unions that built it, and every
-    * scan of it runs one task per right-sized partition.
+    * from the computed count, the returned frame reads the blocks through
+    * a lazy re-blocking RDD: a narrow coalesce to shrink, a round-robin
+    * shuffle (run by the first scan, its output reused by later ones) only
+    * to grow. The returned plan carries the measured `sizeInBytes` and row
+    * count, so Catalyst plans joins against it from its real size instead
+    * of from an estimate inherited through the joins and unions that built
+    * it, and every scan of it runs one task per right-sized partition.
     *
     * Committing a frame that is already committed returns it unchanged
     * and runs no job. */
@@ -111,18 +113,13 @@ object GraftSparkInternals {
         .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
       val target = math.max(1L, (bytes + advisory - 1) / advisory).toInt
       val stats = Statistics(sizeInBytes = BigInt(bytes), rowCount = Some(BigInt(count)))
-      val sized: RDD[InternalRow] =
-        if (target == rows.getNumPartitions) rows
-        else {
-          val c = rows.coalesce(target, shuffle = target > rows.getNumPartitions)
-          c.localCheckpoint()
-          c.count()
-          rows.unpersist(blocking = false)
-          c
-        }
-      sized.setName(Committed)
-      if (sized eq rows) rebuild(df, lr, rows, lr.outputPartitioning, lr.outputOrdering, stats)
-      else rebuild(df, lr, sized, UnknownPartitioning(sized.getNumPartitions), Nil, stats)
+      if (target == rows.getNumPartitions)
+        rebuild(df, lr, rows.setName(Committed), lr.outputPartitioning, lr.outputOrdering, stats)
+      else {
+        val sized = rows.coalesce(target, shuffle = target > rows.getNumPartitions)
+          .setName(Committed)
+        rebuild(df, lr, sized, UnknownPartitioning(sized.getNumPartitions), Nil, stats)
+      }
   }
 
   /** The frame over `lr`'s output read from `rdd`, with `stats` as its

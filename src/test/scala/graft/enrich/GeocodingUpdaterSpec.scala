@@ -1,8 +1,9 @@
 package graft.enrich
 
 import graft.SparkSpec
-import graft.rdf.QuadDiff
+import graft.rdf.{QuadDiff, QuadStore}
 import graft.streaming.Updater
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.functions._
 
 class GeocodingUpdaterSpec extends SparkSpec {
@@ -106,5 +107,26 @@ class GeocodingUpdaterSpec extends SparkSpec {
     neg.sorted shouldBe Seq(("b", "en"), ("b", "fr")) // exactly once each
     // one row per quad in the whole store, no join fan-out
     res.store.count() shouldBe res.store.distinct().count()
+  }
+
+  it should "return the updated store committed" in {
+    val store = quadsDf(("a", "p", "1", "dav:cal"), ("b", "p", "2", "doc:file"))
+    val diff = QuadDiff(
+      added = quadsDf(("x", "p", "10", "dav:cal")),
+      removed = quadsDf(("b", "p", "2", "doc:file")))
+    val res = Updater.applyUpdate(store, diff, writableGraphs = Set("dav:cal"))
+    JobCounter.jobsDuring(spark.sparkContext) {
+      QuadStore.commit(res.store) should be theSameInstanceAs res.store
+    } shouldBe 0
+  }
+
+  it should "leave only the negation row for an addition it also negates" in {
+    val store = quadsDf(("b", "p", "2", "doc:file"))
+    val diff = QuadDiff(
+      added = quadsDf(("b", "p", "2", "doc:file")), // lands in the user graph
+      removed = quadsDf(("b", "p", "2", "doc:file"))) // read-only -> negation
+    val res = Updater.applyUpdate(store, diff, writableGraphs = Set.empty)
+    res.store.select("s", "p", "o", "g").as[(String, String, String, String)]
+      .collect().toSeq shouldBe Seq(("b", "p", "2", Updater.NegationGraph))
   }
 }

@@ -142,7 +142,13 @@ class SetSimJoinSpec extends SparkSpec {
     val vocab = (0 until 60).map(i => s"w$i").toList
     val docs = (0L until 60L).map { id =>
       (id, rnd.shuffle(vocab).take(1 + rnd.nextInt(12)))
-    }
+    } ++ Seq(
+      // a document-frequency tie between a BMP token above the surrogate
+      // range and a non-BMP one, in different documents: UTF-16 code
+      // units order the emoji first, UTF-8 bytes (the join path's sort)
+      // order it last
+      60L -> List("\uFF71", "w1"), 61L -> List("\uFF71", "w2"),
+      62L -> List("\uD83D\uDE00", "w1"), 63L -> List("\uD83D\uDE00", "w3"))
     val df = docs.toDF("id", "toks")
     val recs = df.select(col("id"), col("toks"))
       .where(org.apache.spark.sql.functions.size(col("toks")) > 0)

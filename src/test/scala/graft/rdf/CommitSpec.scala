@@ -3,6 +3,7 @@ package graft.rdf
 import org.apache.spark.JobCounter
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
@@ -83,6 +84,28 @@ class CommitSpec extends SparkSpec {
       val up = QuadStore.commit(raw.coalesce(1))
       up.rdd.getNumPartitions shouldBe ((bytes + advisory - 1) / advisory).toInt
       up.count() shouldBe raw.count()
+    }
+  }
+
+  it should "re-block a multi-partition store in the measuring job alone" in {
+    // no exchange below the store, so the commit's own jobs are all the
+    // jobs there are
+    val store = spark.range(0, 400, 1, 6).select(
+      concat(lit("s:"), $"id").as("s"), lit("p").as("p"), ($"id" % 7).cast("string").as("o"),
+      lit(2.toByte).as("oKind"), lit(null).cast("string").as("oDt"),
+      lit(null).cast("string").as("oLang"), lit("g").as("g"))
+    store.rdd.getNumPartitions shouldBe 6
+    var down: DataFrame = null
+    JobCounter.jobsDuring(spark.sparkContext) { down = QuadStore.commit(store) } shouldBe 1
+    down.rdd.getNumPartitions shouldBe 1
+    down.count() shouldBe 400
+    val advisory = unsafeBytes(store) / 9 + 1
+    withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory.toString) {
+      var up: DataFrame = null
+      JobCounter.jobsDuring(spark.sparkContext) { up = QuadStore.commit(store) } shouldBe 1
+      up.rdd.getNumPartitions shouldBe 9
+      up.collect().toSeq.map(_.toString).sorted shouldBe
+        store.collect().toSeq.map(_.toString).sorted
     }
   }
 

@@ -510,6 +510,32 @@ class SparqlSpec extends SparkSpec {
         |}""".stripMargin).count() shouldBe 0
   }
 
+  it should "treat a variable an OPTIONAL left unbound as compatible (SPARQL 1.1 §18.5)" in {
+    // x1's OPTIONAL binds ?a to p0, x2's leaves ?a unbound; the store has
+    // one p0 self-loop (z) and p0 itself is no self-loop
+    val store = Seq(
+      quad("u:x1", "u:p1", "u:y"), quad("u:x2", "u:p1", "u:y"),
+      quad("u:p0", "u:p0", "la"), quad("u:x1", "u:p0", "lb"),
+      quad("u:z", "u:p0", "u:z"))
+      .toDF("s", "p", "o", "oKind", "oDt", "oLang", "g")
+    def xs(filter: String): Set[String] = Sparql.select(store,
+      s"""SELECT ?x WHERE { ?x <u:p1> ?y
+         |  OPTIONAL { ?a <u:p0> "la" . ?x ?a "lb" . } $filter }""".stripMargin)
+      .as[String].collect().toSet
+    // unbound ?a: the inner pattern matches z, so NOT EXISTS drops x2 and
+    // EXISTS keeps it; bound ?a = p0 matches nothing
+    xs("FILTER NOT EXISTS { ?a <u:p0> ?a }") shouldBe Set("u:x1")
+    xs("FILTER EXISTS { ?a <u:p0> ?a }") shouldBe Set("u:x2")
+    // MINUS needs a shared variable bound on both sides: x2 stays
+    xs("MINUS { ?a <u:p0> ?a }") shouldBe Set("u:x1", "u:x2")
+    xs("MINUS { ?a <u:p0> \"la\" }") shouldBe Set("u:x2")
+    // an inner OPTIONAL leaving ?a unbound: compatible with either x for
+    // EXISTS, and no shared variable bound on both sides for MINUS
+    val innerOpt = "{ ?w <u:p0> ?w OPTIONAL { ?w <u:q> ?a } }"
+    xs(s"FILTER NOT EXISTS $innerOpt") shouldBe Set.empty
+    xs(s"MINUS $innerOpt") shouldBe Set("u:x1", "u:x2")
+  }
+
   "CONSTRUCT/UPDATE term kinds" should "come from the store for variable bindings" in {
     val store = Seq(
       ("mid:m1", "schema:headline", "Re: lunch", Quad.LITERAL, null: String, null: String, "g1"),

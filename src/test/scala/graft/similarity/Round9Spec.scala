@@ -51,6 +51,14 @@ class Round9Spec extends AnyFlatSpec with Matchers {
     }
   }
 
+  it should "match on magnitudes far beyond any cosine (the exact path)" in {
+    val rnd = new scala.util.Random(11)
+    (1 to 100000).foreach { _ =>
+      val v = 100 + rnd.nextDouble() * 4e6
+      check(v); check(-v)
+    }
+  }
+
   it should "match on signed zeros, units and extremes" in {
     Seq(0.0, -0.0, 1.0, -1.0, 0.5e-9, -0.5e-9, 1.5e-9, -1.5e-9,
       4.9e-10, -4.9e-10, 5.1e-10, -5.1e-10,
