@@ -1,7 +1,6 @@
 package graft.enrich
 
-import org.apache.spark.sql.GraftSparkInternals.CappedCheckpoint
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSparkInternals}
 import org.apache.spark.sql.functions._
 
 import graft.rdf.QuadDiff
@@ -69,7 +68,7 @@ object Inference {
           .otherwise(lit(graft.rdf.Quad.IRI)).as("oKind"),
         lit(null).cast("string").as("oDt"),
         lit(null).cast("string").as("oLang"))
-    val base = withKinds.distinct().localCheckpointCapped
+    val base = GraftSparkInternals.commit(withKinds.distinct())
 
     val isResource = col("oKind") =!= graft.rdf.Quad.LITERAL
     // subjects are resources by construction; recover the bnode/IRI split
@@ -160,14 +159,13 @@ object Inference {
       // EqualTo never matches null = null — a plain using-columns anti
       // join would re-derive every resource-valued quad forever
       val derived = applyRules(frontier, all).alias("d")
-      val next = derived
+      val next = GraftSparkInternals.commit(derived
         .join(all.alias("k"),
           cols.map(c => col(s"d.$c") <=> col(s"k.$c")).reduce(_ && _),
-          "left_anti")
-        .localCheckpointCapped
-      if (next.isEmpty) done = true
+          "left_anti"))
+      if (GraftSparkInternals.measured(next)._1 == 0) done = true
       else {
-        all = all.unionByName(next).localCheckpointCapped
+        all = GraftSparkInternals.commit(all.unionByName(next))
         inferred = inferred.unionByName(next)
         frontier = next
       }

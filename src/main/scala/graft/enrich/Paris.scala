@@ -1,7 +1,6 @@
 package graft.enrich
 
-import org.apache.spark.sql.GraftSparkInternals.CappedCheckpoint
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSparkInternals}
 import org.apache.spark.sql.functions._
 
 /** PARIS-style probabilistic instance alignment (reference
@@ -69,9 +68,9 @@ object Paris {
           .as("prob"))
     }
 
-    var eq = round(None).where(col("prob") >= threshold).localCheckpointCapped
+    var eq = GraftSparkInternals.commit(round(None).where(col("prob") >= threshold))
     for (_ <- 2 to iterations) {
-      eq = round(Some(eq)).where(col("prob") >= threshold).localCheckpointCapped
+      eq = GraftSparkInternals.commit(round(Some(eq)).where(col("prob") >= threshold))
     }
     eq
   }
@@ -126,8 +125,8 @@ object Paris {
       props: DataFrame,
       iterations: Int = 10,
       threshold: Double = 0.0): DataFrame = {
-    val st = stmts.select(col("x"), col("p"), col("o"), col("oIsInstance"))
-      .distinct().localCheckpointCapped
+    val st = GraftSparkInternals.commit(
+      stmts.select(col("x"), col("p"), col("o"), col("oIsInstance")).distinct())
     val pr = broadcast(props.select(col("p"), col("fun"), col("inv_fun")))
 
     def symWithIdentity(eq: DataFrame, ids: DataFrame): DataFrame =
@@ -137,12 +136,11 @@ object Paris {
         .groupBy(col("o1"), col("o2")).agg(max(col("prob")).as("prob"))
         .where(col("prob") > 0)
 
-    val litEqFull = symWithIdentity(
+    val litEqFull = GraftSparkInternals.commit(symWithIdentity(
       litEq, st.where(!col("oIsInstance")).select(col("o")).distinct())
-      .withColumn("objIsInstance", lit(false))
-      .localCheckpointCapped
-    val instIds = st.where(col("oIsInstance")).select(col("o")).distinct()
-      .localCheckpointCapped
+      .withColumn("objIsInstance", lit(false)))
+    val instIds = GraftSparkInternals.commit(
+      st.where(col("oIsInstance")).select(col("o")).distinct())
 
     val a = st.alias("a")
     val b = st.alias("b")
@@ -164,7 +162,7 @@ object Paris {
           .withColumn("objIsInstance", lit(true)))
       // evidence rows: x's statement (a) reaches x's candidate's statement
       // (b) through an equivalent object under the SAME property
-      val ev = a
+      val ev = GraftSparkInternals.commit(a
         .join(objEq.alias("e"),
           col("a.o") === col("e.o1") && col("a.oIsInstance") === col("e.objIsInstance"))
         .join(b,
@@ -173,8 +171,7 @@ object Paris {
             col("b.x") =!= col("a.x"))
         .join(pr, col("a.p") === pr("p"))
         .select(col("a.x").as("x1"), col("b.x").as("x2"), col("a.p").as("sp"),
-          col("a.o").as("y"), col("fun"), col("inv_fun"), col("e.prob").as("eq"))
-        .localCheckpointCapped
+          col("a.o").as("y"), col("fun"), col("inv_fun"), col("e.prob").as("eq")))
       val cand = ev.where(col("fun") > 0 || col("inv_fun") > 0)
         .select(col("x1"), col("x2")).distinct()
       val posDf = ev.where(col("inv_fun") > 0)
@@ -202,14 +199,13 @@ object Paris {
         .groupBy(col("x1"), col("x2"))
         .agg(prodExact(
           lit(1.0) - col("fun") * coalesce(col("inner"), lit(1.0))).as("neg"))
-      instEq = cand
+      instEq = GraftSparkInternals.commit(cand
         .join(posDf, Seq("x1", "x2"), "left_outer")
         .join(negDf, Seq("x1", "x2"), "left_outer")
         .select(col("x1"), col("x2"),
           ((lit(1.0) - coalesce(col("pos"), lit(1.0))) *
             coalesce(col("neg"), lit(1.0))).as("prob"))
-        .where(col("prob") > 0)
-        .localCheckpointCapped
+        .where(col("prob") > 0))
     }
     instEq.where(col("prob") >= threshold)
   }

@@ -1,7 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.GraftSparkInternals.CappedCheckpoint
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSparkInternals}
 import org.apache.spark.sql.functions._
 
 /** Multi-source BFS hop distances — the distributed frontier expansion
@@ -15,10 +14,11 @@ import org.apache.spark.sql.functions._
   * i-1 expand in round i (frontier ⋈ edges, left-anti against the
   * settled set), so total work is O(Σ frontier sizes) = O(E) across the
   * whole run, not O(E) per round. Settled distances and the frontier
-  * are localCheckpointed per round — the loop re-reads materialized
-  * tables, and plan depth stays constant. Integer hop counts make the
-  * result engine-exact at any partitioning; the SQL oracle unrolls the
-  * rounds as left-anti-joined expansions.
+  * are committed per round — the loop re-reads materialized tables,
+  * plan depth stays constant, and an empty frontier is read off its
+  * measured row count rather than found by a job. Integer hop counts
+  * make the result engine-exact at any partitioning; the SQL oracle
+  * unrolls the rounds as left-anti-joined expansions.
   */
 object Bfs {
 
@@ -28,21 +28,20 @@ object Bfs {
   def hopDistances(edges: DataFrame, sources: DataFrame,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .distinct().localCheckpointCapped
-    var settled = sources.select(col("id").cast("long")).distinct()
-      .withColumn("dist", lit(0)).localCheckpointCapped
-    var frontier = settled.select(col("id"))
+    val e = GraftSparkInternals.commit(
+      edges.select(col("src").cast("long"), col("dst").cast("long")).distinct())
+    var settled = GraftSparkInternals.commit(
+      sources.select(col("id").cast("long")).distinct().withColumn("dist", lit(0)))
+    var frontier = settled // the join below reads only its `id`
     var hop = 0
-    while (hop < maxHops && !frontier.isEmpty) {
-      val next = e.join(frontier.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id")).distinct()
-        .join(settled.select(col("id")), Seq("id"), "left_anti")
-        .localCheckpointCapped
+    while (hop < maxHops && GraftSparkInternals.measured(frontier)._1 > 0) {
+      val next = GraftSparkInternals.commit(
+        e.join(frontier.withColumnRenamed("id", "src"), "src")
+          .select(col("dst").as("id")).distinct()
+          .join(settled.select(col("id")), Seq("id"), "left_anti"))
       hop += 1
-      settled = settled
-        .unionByName(next.withColumn("dist", lit(hop)))
-        .localCheckpointCapped
+      settled = GraftSparkInternals.commit(
+        settled.unionByName(next.withColumn("dist", lit(hop))))
       frontier = next
     }
     settled
@@ -58,24 +57,22 @@ object Bfs {
   def boundedShortestPaths(edges: DataFrame, sources: DataFrame,
       maxRounds: Int): DataFrame = {
     require(maxRounds >= 0, "maxRounds must be >= 0")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
-      col("w").cast("long")).localCheckpointCapped
-    var dist = sources.select(col("id").cast("long")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpointCapped
+    val e = GraftSparkInternals.commit(edges.select(col("src").cast("long"),
+      col("dst").cast("long"), col("w").cast("long")))
+    var dist = GraftSparkInternals.commit(
+      sources.select(col("id").cast("long")).distinct().withColumn("dist", lit(0L)))
     var frontier = dist
     var round = 0
-    while (round < maxRounds && !frontier.isEmpty) {
+    while (round < maxRounds && GraftSparkInternals.measured(frontier)._1 > 0) {
       val cand = e.join(frontier.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), (col("dist") + col("w")).as("nd"))
         .groupBy(col("id")).agg(min(col("nd")).as("nd"))
-      val improved = cand.join(dist, Seq("id"), "left")
+      val improved = GraftSparkInternals.commit(cand.join(dist, Seq("id"), "left")
         .where(col("dist").isNull || col("nd") < col("dist"))
-        .select(col("id"), col("nd").as("dist"))
-        .localCheckpointCapped
-      dist = dist.withColumnRenamed("dist", "old")
+        .select(col("id"), col("nd").as("dist")))
+      dist = GraftSparkInternals.commit(dist.withColumnRenamed("dist", "old")
         .join(improved, Seq("id"), "full_outer")
-        .select(col("id"), coalesce(col("dist"), col("old")).as("dist"))
-        .localCheckpointCapped
+        .select(col("id"), coalesce(col("dist"), col("old")).as("dist")))
       frontier = improved
       round += 1
     }

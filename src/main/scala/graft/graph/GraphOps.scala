@@ -1,7 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.GraftSparkInternals.CappedCheckpoint
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSparkInternals, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph operators expressed as iterative DataFrame plans.
@@ -10,8 +9,9 @@ import org.apache.spark.sql.functions._
   * (`graph/src/main/com/thymeflow/graph/ConnectedComponents.scala:9-36` —
   * BFS over a neighbor function) which caps at driver heap. Here both
   * closure and components are semi-naive fixpoint loops over DataFrames:
-  * each iteration is a shuffle join, lineage is cut with localCheckpoint so
-  * plans stay O(1) deep, and convergence is detected with cheap counts.
+  * each iteration is a shuffle join, the state is pinned with
+  * `GraftSparkInternals.commit` so plans stay O(1) deep, and convergence
+  * is read off the row count that commit measured (no counting job).
   * At cluster scale the per-iteration joins shuffle-partition on the join
   * key and benefit from AQE; label propagation uses pointer-jumping so long
   * paths converge in O(log n) rounds, not O(n).
@@ -33,20 +33,6 @@ object GraphOps {
       s"transitive closure exceeded $pairs pairs (budget $budget); " +
         "raise maxPairs or pre-filter the edge set")
 
-  /** Sampled estimate of the materialized byte size of `df` (`rows` total):
-    * driver fast paths must gate on BYTES, not row counts — 1M short longs
-    * collect fine, 1M long IRIs may not. */
-  private def approxBytes(df: DataFrame, rows: Long, sampleN: Int = 1000): Long = {
-    if (rows <= 0) return 0L
-    val sample = df.take(math.min(sampleN.toLong, rows).toInt)
-    if (sample.isEmpty) return 0L
-    val avg = sample.map { r =>
-      (0 until r.length).map(i =>
-        Option(r.get(i)).map(_.toString.length).getOrElse(0) + 16).sum
-    }.sum.toDouble / sample.length
-    (avg * rows).toLong
-  }
-
   /** Transitive closure of a directed edge set (`src`, `dst`): all pairs
     * (a, b) such that b is reachable from a in >= 1 step. Semi-naive
     * evaluation: only the newly-discovered frontier is re-joined per round.
@@ -59,15 +45,15 @@ object GraphOps {
       smallGraphThreshold: Long = 100000,
       maxPairs: Long = 50000000L,
       maxDriverBytes: Long = 256L << 20): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpointCapped
+    val e = GraftSparkInternals.commit(edges.select(col("src"), col("dst")).distinct())
     // adaptive: small edge sets are solved exactly on the driver (the
     // reference's own regime — SURVEY G1: "for <=1e5 nodes, driver BFS is
     // acceptable and exact"); the distributed fixpoint pays ~0.5s of job
     // scheduling per iteration, which only amortizes on big graphs. The
-    // gate is rows AND estimated bytes — wide IRI ids flip to distributed
-    // long before the row threshold.
-    val n = e.count()
-    if (n <= smallGraphThreshold && approxBytes(e, n) <= maxDriverBytes)
+    // gate is rows AND bytes, both as commit measured them — wide IRI ids
+    // flip to distributed long before the row threshold.
+    val (n, bytes) = GraftSparkInternals.measured(e)
+    if (n <= smallGraphThreshold && bytes <= maxDriverBytes)
       return closureOnDriver(e, maxPairs)
     var closure = e
     var frontier = e
@@ -75,19 +61,18 @@ object GraphOps {
     var i = 0
     var done = false
     while (!done && i < maxIterations) {
-      val next = frontier.alias("f")
+      val next = GraftSparkInternals.commit(frontier.alias("f")
         .join(e.alias("e"), col("f.dst") === col("e.src"))
         .select(col("f.src").as("src"), col("e.dst").as("dst"))
         .distinct()
-        .join(closure, Seq("src", "dst"), "left_anti")
-        .localCheckpointCapped
-      val added = next.count()
+        .join(closure, Seq("src", "dst"), "left_anti"))
+      val added = GraftSparkInternals.measured(next)._1
       if (added == 0) done = true
       else {
         total += added
         // circuit breaker: fail fast before materializing a quadratic blowup
         if (total > maxPairs) throw new ClosureBudgetExceeded(total, maxPairs)
-        closure = refreshed(closure).union(refreshed(next)).localCheckpointCapped
+        closure = GraftSparkInternals.commit(refreshed(closure).union(refreshed(next)))
         frontier = next
       }
       i += 1
@@ -157,16 +142,15 @@ object GraphOps {
     }
     // distributed path: the label loop reads the symmetrized edge set every
     // round — materialize it once
-    val sym = edges.select(col("src"), col("dst"))
+    val sym = GraftSparkInternals.commit(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpointCapped
+      .distinct())
     val edgeVerts = sym.select(col("src").as("id")).distinct()
     val allVerts = vertices
       .map(v => edgeVerts.union(v.select(col("id"))).distinct())
       .getOrElse(edgeVerts)
 
-    var labels = allVerts.withColumn("component", col("id")).localCheckpointCapped
+    var labels = GraftSparkInternals.commit(allVerts.withColumn("component", col("id")))
     var changed = true
     var i = 0
     while (changed && i < maxIterations) {
@@ -189,7 +173,7 @@ object GraphOps {
       // two pointer-jump rounds (component := component-of-component) halve
       // long-path diameters faster; the carried `old` column makes the
       // convergence check a filter on the materialized result, not a join
-      val next = jump(jump(propagated)).localCheckpointCapped
+      val next = GraftSparkInternals.commit(jump(jump(propagated)))
       changed = !next.where(col("component") =!= col("old")).isEmpty
       labels = next.select(col("id"), col("component"))
       i += 1

@@ -1,7 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.GraftSparkInternals.CappedCheckpoint
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSparkInternals}
 import org.apache.spark.sql.functions._
 
 /** HITS hubs & authorities (Kleinberg 1999) — the bipartite-flavored
@@ -25,8 +24,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: per half-step ONE join of the current score onto edges
   * and ONE aggregation on the opposite endpoint; the max is a 1-row
-  * broadcast, so normalization is map-side. Edges are localCheckpointed
-  * once; hub in-skew is absorbed by partial aggregation exactly as in
+  * broadcast, so normalization is map-side. Edges are committed once;
+  * hub in-skew is absorbed by partial aggregation exactly as in
   * PageRank. */
 object Hits {
 
@@ -36,11 +35,10 @@ object Hits {
   def fixedPoint(edges: DataFrame, iterations: Int,
       scale: Long = 1000000L, checkpointEvery: Int = 4): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .localCheckpointCapped
-    val vertices = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id")))
-      .distinct().localCheckpointCapped
+    val e = GraftSparkInternals.commit(
+      edges.select(col("src").cast("long"), col("dst").cast("long")))
+    val vertices = GraftSparkInternals.commit(e.select(col("src").as("id"))
+      .unionByName(e.select(col("dst").as("id"))).distinct())
 
     // the score·scale product runs in decimal(38,0): a raw half-step sum
     // is bounded by in-degree·scale, so long arithmetic would wrap for
@@ -62,8 +60,8 @@ object Hits {
         .groupBy(col("src").as("id")).agg(sum(col("a")).as("h"))
       hub = normalized(hRaw, "h")
       if ((i + 1) % checkpointEvery == 0 && i + 1 < iterations) {
-        auth = auth.localCheckpointCapped
-        hub = hub.localCheckpointCapped
+        auth = GraftSparkInternals.commit(auth)
+        hub = GraftSparkInternals.commit(hub)
       }
     }
     vertices

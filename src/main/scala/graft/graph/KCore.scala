@@ -1,7 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.GraftSparkInternals.CappedCheckpoint
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSparkInternals}
 import org.apache.spark.sql.functions._
 
 /** k-core decomposition by iterative peeling — the standard
@@ -19,7 +18,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: each round is ONE degree aggregation over the current
   * edge set plus two semi-joins to drop edges with a deleted endpoint —
   * all key-partitioned shuffles, no row explosion; the edge frame is
-  * localCheckpointed every few rounds to bound plan depth. Rounds are
+  * committed every few rounds to bound plan depth. Rounds are
   * data-dependent but small in practice (the degeneracy ordering
   * converges in O(peel depth) rounds, and `maxRounds` caps pathology).
   * Early exit when a round deletes nothing.
@@ -41,10 +40,9 @@ object KCore {
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .distinct()
-    var e = undirected
+    var e = GraftSparkInternals.commit(undirected // one directed row per (vertex, neighbor)
       .select(col("u").as("src"), col("v").as("dst"))
-      .unionByName(undirected.select(col("v").as("src"), col("u").as("dst")))
-      .localCheckpointCapped // one directed row per (vertex, neighbor)
+      .unionByName(undirected.select(col("v").as("src"), col("u").as("dst"))))
 
     var round = 0
     var done = false
@@ -59,7 +57,7 @@ object KCore {
           .join(kept.withColumnRenamed("id", "dst"), "dst")
           .select(col("src"), col("dst"))
         e =
-          if ((round + 1) % checkpointEvery == 0) next.localCheckpointCapped
+          if ((round + 1) % checkpointEvery == 0) GraftSparkInternals.commit(next)
           else next
       }
       round += 1

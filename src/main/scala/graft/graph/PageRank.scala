@@ -1,7 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.GraftSparkInternals.CappedCheckpoint
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSparkInternals}
 import org.apache.spark.sql.functions._
 
 /** Fixed-point PageRank — link-graph authority scoring as corpus-quality
@@ -26,13 +25,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: per iteration ONE shuffle of (rank ⋈ edges on src,
   * pre-divided contributions) and ONE aggregation shuffle on dst; edges
-  * with their out-degrees are computed once and localCheckpointed, so
-  * the loop re-reads a materialized (src, dst, deg) table instead of
-  * re-counting. Lineage is cut every `checkpointEvery` iterations —
-  * plan depth stays bounded on long runs without paying a
-  * materialization per step on short ones. Skewed
-  * in-degree (a hub page) is one aggregation key: partial aggregation
-  * absorbs it map-side. */
+  * with their out-degrees are computed once and lazily localCheckpointed,
+  * so the loop re-reads a materialized (src, dst, deg) table instead of
+  * re-counting. The rank state is committed every `checkpointEvery`
+  * iterations — plan depth stays bounded on long runs without paying a
+  * materialization per step on short ones. Skewed in-degree (a hub
+  * page) is one aggregation key: partial aggregation absorbs it
+  * map-side. */
 object PageRank {
 
   /** Edges: (src, dst) integral ids, duplicates = parallel links (each
@@ -54,9 +53,9 @@ object PageRank {
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // lazy: the final action materializes it on first use — the loop's
     // iterations read it strictly downstream, so eagerness only added a
-    // serial driver job
-    val withDeg = org.apache.spark.sql.GraftSparkInternals
-      .localCheckpointCapped(e.join(deg, "src"), eager = false)
+    // serial driver job. Its inherited estimate is a product of two base
+    // tables' sizes, not of the loop state's, so it cannot compound
+    val withDeg = e.join(deg, "src").localCheckpoint(eager = false)
     // single consumer (the final assignment join) — no checkpoint; a
     // materialization here would add a full job for a frame read once
     val vertices = e.select(col("src").as("id"))
@@ -92,7 +91,7 @@ object PageRank {
         (lit(base) + expr(s"($dampNum * m) div $dampDen")).as("rank"))
       ranks = Some(
         if ((i + 1) % checkpointEvery == 0 && i + 1 < iterations)
-          next.localCheckpointCapped
+          GraftSparkInternals.commit(next)
         else next)
     }
     ranks match {

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSparkInternals}
 import org.apache.spark.sql.functions._
 
 /** Strongly connected components of a DIRECTED graph — mutual
@@ -99,20 +99,19 @@ object Scc {
         .toDF("id", "scc")
 
     val sc = spark.sparkContext
-    // checkpoint bookkeeping: cp() returns the materialized frame plus
-    // the persistent-RDD ids it pinned; free() drops a superseded
+    // checkpoint bookkeeping: cp() commits the frame (measured stats:
+    // this loop self-joins its state ~9 ways per iteration, so an
+    // inherited estimate would compound) and returns it plus the
+    // persistent-RDD ids it pinned; free() drops a superseded
     // generation. Only ids WE pinned are ever freed, so concurrent
-    // caches elsewhere in the session are untouched.
+    // caches elsewhere in the session are untouched. rows() reads a
+    // cp()'d frame's measured row count — no job.
     def cp(df: DataFrame): (DataFrame, Set[Int]) = {
       val before = sc.getPersistentRDDs.keySet.toSet
-      // capped-stats checkpoint: this loop self-joins its state ~9 ways
-      // per iteration, and Spark 4's origin-stats inheritance would
-      // compound sizeInBytes estimates to millions of digits within ~8
-      // iterations (BigInt stats math then dominates planning)
-      val out = org.apache.spark.sql.GraftSparkInternals
-        .localCheckpointCapped(df)
+      val out = GraftSparkInternals.commit(df)
       (out, sc.getPersistentRDDs.keySet.toSet -- before)
     }
+    def rows(df: DataFrame): Long = GraftSparkInternals.measured(df)._1
     def free(ids: Set[Int]): Unit = ids.foreach(i =>
       sc.getPersistentRDDs.get(i).foreach(_.unpersist(blocking = false)))
 
@@ -143,7 +142,7 @@ object Scc {
     val cutL = math.min(Int.MaxValue.toLong - 2, maxDriverBytes / 128)
 
     var round = 0
-    while (verts.take(1).nonEmpty && round < maxIterations) {
+    while (rows(verts) > 0 && round < maxIterations) {
       round += 1
       onRound(round)
 
@@ -180,14 +179,16 @@ object Scc {
       // iterations, observed on a 100k-deep tendril probe).
       var trimming = true
       var trimIter = 0
-      while (trimming && trimIter < 3 && verts.take(1).nonEmpty) {
+      while (trimming && trimIter < 3 && rows(verts) > 0) {
         trimIter += 1
         val (core, coreIds) = cp(verts
           .join(remaining.select(col("src").as("id")), Seq("id"), "left_semi")
           .join(remaining.select(col("dst").as("id")), Seq("id"), "left_semi"))
-        val trimmed = verts.join(core, Seq("id"), "left_anti")
-        if (trimmed.take(1).isEmpty) { trimming = false; free(coreIds) }
+        // core is a semi-join of verts, so the trim peeled something iff
+        // it lost rows
+        if (rows(core) == rows(verts)) { trimming = false; free(coreIds) }
         else {
+          val trimmed = verts.join(core, Seq("id"), "left_anti")
           val (d2, dIds) = cp(done.union(
             trimmed.select(col("id"), col("id").as("scc"))))
           free(doneIds); done = d2; doneIds = dIds
@@ -198,7 +199,7 @@ object Scc {
           free(remainingIds); remaining = r2; remainingIds = rIds
         }
       }
-      if (verts.take(1).isEmpty) {
+      if (rows(verts) == 0) {
         free(remainingIds); free(vertsIds)
         return finish()
       }
@@ -233,7 +234,7 @@ object Scc {
       var pass = 0
       while (contracting && pass < 40) {
         pass += 1
-        val nVerts = verts.count()
+        val nVerts = rows(verts)
         val kDoubles = 64 - java.lang.Long.numberOfLeadingZeros(
           math.max(nVerts - 1, 1)) // ceil(log2 n)
         val pbSeed0 = remaining
@@ -472,7 +473,7 @@ object Scc {
     // recursion is pathologically unbalanced (expected depth is
     // logarithmic — every part sheds its pivot's SCC per round). Wrong
     // labels must never ship silently, so this fails loudly.
-    if (verts.take(1).nonEmpty) throw new IllegalStateException(
+    if (rows(verts) > 0) throw new IllegalStateException(
       s"SCC divide-and-conquer did not finish within $maxIterations " +
         "rounds; raise maxIterations")
     finish()

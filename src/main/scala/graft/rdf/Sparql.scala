@@ -858,23 +858,13 @@ object Sparql {
           compileGroup(quads, r, graph, metaVars, named)))
       case Opt(inner) =>
         val left = current.getOrElse(sys.error("OPTIONAL without preceding bindings"))
-        val innerIsPlainBgp = inner.forall(_.isInstanceOf[Triple]) &&
-          !inner.exists { // object vars needing metadata take the general path
-            case Triple(_, _, o) => o.startsWith("?") && metaVars(o.drop(1))
-            case _ => false
-          }
-        if (innerIsPlainBgp)
-          current = Some(Bgp.optional(left, quads,
-            inner.collect { case t: Triple => toPattern(t, graph) }: _*))
-        else {
-          // general OPTIONAL group (e.g. a UNION inside OPTIONAL,
-          // AgentMatchEnricher.scala:105-111): left-outer join on the
-          // shared variables (metadata side columns excluded — see
-          // dropDupMeta note)
-          val right = dropDupMeta(left, compileGroup(quads, inner, graph, metaVars, named))
-          val shared = left.columns.intersect(right.columns).toSeq
-          current = Some(left.join(right, shared, "left_outer"))
-        }
+        // the inner group (a BGP, or e.g. a UNION inside OPTIONAL,
+        // AgentMatchEnricher.scala:105-111) left-outer joins on the
+        // shared variables (metadata side columns excluded — see
+        // dropDupMeta note)
+        val right = dropDupMeta(left, compileGroup(quads, inner, graph, metaVars, named))
+        val shared = left.columns.intersect(right.columns).toSeq
+        current = Some(left.join(right, shared, "left_outer"))
       case f: FilterCond =>
         val df = current.getOrElse(sys.error("FILTER without bindings"))
         current = Some(df.where(exprColumn(f.e, df)))
@@ -1487,14 +1477,14 @@ object Sparql {
         raw.withColumn("oKind",
           coalesce(col("__groundKind"), lit(Quad.LITERAL)).cast("byte"))
       else {
-        // term-metadata join-back: any value the store uses as a subject
-        // or predicate is an IRI; object occurrences carry their full
-        // (kind, datatype, language) so CONSTRUCTed literals keep
+        // term-metadata join-back: a predicate is an IRI, a subject an
+        // IRI or (`_:` label) a blank node; object occurrences carry their
+        // full (kind, datatype, language) so CONSTRUCTed literals keep
         // ^^datatype / @lang in N-Quads output. One deterministic
         // metadata row per term (IRI reading preferred, then smallest
         // datatype/language).
-        val asIri = (c: String) => store.select(col(c).as("__term"),
-          lit(Quad.IRI).cast("byte").as("__mKind"),
+        val asResource = (c: String, kind: Column) => store.select(col(c).as("__term"),
+          kind.cast("byte").as("__mKind"),
           lit(null).cast("string").as("__mDt"),
           lit(null).cast("string").as("__mLang"))
         val mw = org.apache.spark.sql.expressions.Window
@@ -1504,7 +1494,9 @@ object Sparql {
         val termMeta = store.select(col("o").as("__term"),
             col("oKind").as("__mKind"), col("oDt").as("__mDt"),
             col("oLang").as("__mLang"))
-          .unionByName(asIri("s")).unionByName(asIri("p"))
+          .unionByName(asResource("s",
+            when(col("s").startsWith("_:"), Quad.BNODE).otherwise(Quad.IRI)))
+          .unionByName(asResource("p", lit(Quad.IRI)))
           .distinct()
           .withColumn("__rk", row_number().over(mw)).where(col("__rk") === 1)
           .drop("__rk")

@@ -51,15 +51,16 @@ object SparqlEndpoint {
   final class Snapshot(store: DataFrame) {
     val quads: DataFrame = QuadStore.commit(store)
 
-    /** Distinct term → kind (IRI=0 wins ties: any term standing as a
-      * subject or predicate is an IRI; object occurrences carry their
-      * stored kind). */
+    /** Distinct term → kind (IRI=0 wins ties: a term standing as a
+      * predicate is an IRI, as a subject an IRI or, by its `_:` label, a
+      * blank node; object occurrences carry their stored kind). */
     lazy val termKinds: DataFrame = {
       import org.apache.spark.sql.functions._
       QuadStore.commit(
         quads.select(col("o").as("__term"), col("oKind").cast("byte").as("__k"))
           .unionByName(quads.select(col("s").as("__term"),
-            lit(Quad.IRI).cast("byte").as("__k")))
+            when(col("s").startsWith("_:"), Quad.BNODE).otherwise(Quad.IRI)
+              .cast("byte").as("__k")))
           .unionByName(quads.select(col("p").as("__term"),
             lit(Quad.IRI).cast("byte").as("__k")))
           .groupBy(col("__term")).agg(min(col("__k")).as("__k")))

@@ -871,12 +871,10 @@ object Ann {
           (cid, tot)
         }
         .toDF("cent_id", "cent_vec")
-      // capped stats: each iteration's means derive from a corpus x cents
-      // join, so raw origin-stats inheritance compounds per iteration
       // lazy: the next consumer is always a centroid COLLECT (the next
-      // Lloyd round's kernel or the caller's router) — it materializes
-      cents = org.apache.spark.sql.GraftSparkInternals
-        .localCheckpointCapped(means, eager = false)
+      // Lloyd round's kernel or the caller's router) — it materializes,
+      // and no join ever plans from these stats
+      cents = means.localCheckpoint(eager = false)
     }
     cents
   }

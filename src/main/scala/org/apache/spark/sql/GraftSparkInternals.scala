@@ -8,68 +8,27 @@ import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.internal.SQLConf
 
-/** Minimal bridge into Spark-private surface (hence the package): two
-  * checkpoint helpers that rebuild the checkpoint's `LogicalRDD` with
-  * statistics other than the ones Spark inherits.
+/** Minimal bridge into Spark-private surface (hence the package): the
+  * one helper that pins a frame, [[commit]], and the reader of what it
+  * measured, [[measured]].
   *
-  * Spark 4's `Dataset.checkpoint` builds its `LogicalRDD` with
-  * `originStats` = the PRE-checkpoint plan's estimated statistics, so
-  * the truncated plan still plans joins with realistic sizes. For a
-  * fixpoint loop that re-checkpoints each iteration this inheritance
-  * compounds: join estimates are PRODUCTS of child sizes, so an
-  * iteration whose plan joins the checkpointed state with itself k
-  * times produces sizeInBytes ≈ S^k — the estimate's DIGIT COUNT grows
-  * k-fold per iteration, and by ~iteration 8 Catalyst is multiplying
-  * million-digit BigInts inside stats estimation: planning a single
-  * take(1) burns minutes of driver CPU (observed: the round-9 SCC
-  * rewrite hung its own spec there, in
-  * SizeInBytesOnlyStatsPlanVisitor via canBroadcastBySize).
-  *
-  * [[localCheckpointCapped]] CAPS the inherited size at checkpoint time.
-  * Capping is planning-neutral: every capped value still far exceeds any
-  * autoBroadcastJoinThreshold, and genuinely small states (the ones a
-  * broadcast decision cares about) sit below the cap untouched. Row
-  * counts and column stats pass through unchanged.
-  *
-  * [[commit]] goes further for frames that are read many times (a
-  * quad-store version): it MEASURES the materialized rows and sizes the
-  * partitions from the measurement.
+  * The rule: a frame that is read more than once (a quad-store version,
+  * the state of a fixpoint loop) is pinned with [[commit]], and a loop
+  * that needs the pinned frame's size reads [[measured]] instead of
+  * running a `count`/`isEmpty` job. A plain `localCheckpoint` builds its
+  * `LogicalRDD` with the pre-checkpoint plan's ESTIMATED statistics; in a
+  * loop that joins its checkpointed state with itself, join estimates are
+  * products of child sizes, so the estimate compounds round over round
+  * until Catalyst spends minutes multiplying million-digit BigInts
+  * (observed: the round-9 SCC rewrite hung in
+  * SizeInBytesOnlyStatsPlanVisitor). [[commit]] replaces the estimate
+  * with the measured size, so nothing compounds.
   */
 object GraftSparkInternals {
-
-  /** 1 PiB — astronomically above any broadcast threshold, harmlessly
-    * below BigInt-blowup territory. */
-  private val SizeCap: BigInt = BigInt(1L) << 50
 
   /** Name of every RDD [[commit]] produced: a frame whose plan is a
     * `LogicalRDD` over such an RDD is already committed. */
   private val Committed = "graft.commit"
-
-  /** Call-site sugar: `df.localCheckpointCapped` via
-    * `import org.apache.spark.sql.GraftSparkInternals.CappedCheckpoint`. */
-  implicit class CappedCheckpoint(private val df: DataFrame) extends AnyVal {
-    def localCheckpointCapped: DataFrame =
-      GraftSparkInternals.localCheckpointCapped(df)
-  }
-
-  /** `df.localCheckpoint()` with the origin-stats size estimate capped,
-    * so iterative self-join loops can checkpoint every round without
-    * exponential stats compounding. `eager = false` defers the
-    * materialization to the first consuming job (one fewer serial driver
-    * job; Spark backfills any partitions that job skipped) — right when
-    * the consumers are strictly downstream jobs, wrong when concurrent
-    * stages would race to compute the frame. */
-  def localCheckpointCapped(df: DataFrame, eager: Boolean = true): DataFrame = {
-    val out = df.localCheckpoint(eager)
-    out.queryExecution.analyzed match {
-      case lr: LogicalRDD =>
-        val stats = lr.computeStats()
-        if (stats.sizeInBytes <= SizeCap) out
-        else rebuild(df, lr, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
-          stats.copy(sizeInBytes = SizeCap))
-      case _ => out
-    }
-  }
 
   /** Materialize `df` once, right-sized and with measured statistics,
     * in exactly one job.
@@ -120,6 +79,19 @@ object GraftSparkInternals {
           .setName(Committed)
         rebuild(df, lr, sized, UnknownPartitioning(sized.getNumPartitions), Nil, stats)
       }
+  }
+
+  /** `(rows, bytes)` that [[commit]] measured for `df`, read without a
+    * job. Only a frame [[commit]] returned carries them: a projection,
+    * filter or join of one is planned from estimates again, so it is
+    * rejected rather than answered with a guess. */
+  def measured(df: DataFrame): (Long, Long) = df.queryExecution.analyzed match {
+    case lr: LogicalRDD if lr.rdd.name == Committed =>
+      val stats = lr.computeStats()
+      (stats.rowCount.get.toLong, stats.sizeInBytes.toLong)
+    case other => throw new IllegalArgumentException(
+      s"not a committed frame (plan root ${other.nodeName}): measured reads " +
+        "only what commit returned")
   }
 
   /** The frame over `lr`'s output read from `rdd`, with `stats` as its

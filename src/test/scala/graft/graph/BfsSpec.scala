@@ -1,5 +1,7 @@
 package graft.graph
 
+import org.apache.spark.JobCounter
+
 import graft.SparkSpec
 
 class BfsSpec extends SparkSpec {
@@ -35,6 +37,16 @@ class BfsSpec extends SparkSpec {
     val out = Bfs.hopDistances(e, Seq(1L).toDF("id"), maxHops = 50)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     out shouldBe Map(1L -> 0, 2L -> 1, 3L -> 2)
+  }
+
+  it should "read an empty frontier off its commit, not run a job per hop for it" in {
+    val e = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
+    val src = Seq(1L).toDF("id")
+    def jobs(hops: Int): Int =
+      JobCounter.jobsDuring(spark.sparkContext) { Bfs.hopDistances(e, src, hops) }
+    // a hop costs the jobs of its two commits (next frontier, settled set)
+    // and no emptiness check
+    (1 to 3).map(h => jobs(h) - jobs(h - 1)) shouldBe Seq(5, 5, 5)
   }
 
   behavior of "Bfs.boundedShortestPaths"

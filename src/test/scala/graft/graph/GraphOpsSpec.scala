@@ -1,5 +1,7 @@
 package graft.graph
 
+import org.apache.spark.JobCounter
+
 import graft.SparkSpec
 
 class GraphOpsSpec extends SparkSpec {
@@ -50,6 +52,16 @@ class GraphOpsSpec extends SparkSpec {
       GraphOps.connectedComponents(edges, None, smallGraphThreshold = thr)
         .as[(Long, Long)].collect().toMap shouldBe Map(10L -> 9L, 9L -> 9L)
     }
+  }
+
+  "transitiveClosure on a small graph" should "gate on what committing the edges measured" in {
+    val edges = Seq(("a", "b"), ("b", "c"), ("c", "d")).toDF("src", "dst")
+    var closure: Array[(String, String)] = null
+    // the edge commit and the driver collect; no count or width-sample job
+    JobCounter.jobsDuring(spark.sparkContext) {
+      closure = GraphOps.transitiveClosure(edges).as[(String, String)].collect()
+    } shouldBe 3
+    closure.length shouldBe 6
   }
 
   "components with mixed-width integral ids" should "emit the widest type, never wrapping" in {

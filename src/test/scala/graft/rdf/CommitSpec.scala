@@ -1,7 +1,7 @@
 package graft.rdf
 
 import org.apache.spark.JobCounter
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSparkInternals}
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.functions._
 
@@ -147,5 +147,37 @@ class CommitSpec extends SparkSpec {
                       |  ?c <nation> <n:1> . ?c <segment> "BUILDING" }""".stripMargin
     rows(Sparql.construct(committed, construct)).sorted shouldBe
       rows(Sparql.construct(raw, construct)).sorted
+  }
+
+  "measured" should "read the committed rows and bytes without a job" in {
+    val committed = QuadStore.commit(raw)
+    var got = (0L, 0L)
+    JobCounter.jobsDuring(spark.sparkContext) {
+      got = GraftSparkInternals.measured(committed)
+    } shouldBe 0
+    got shouldBe ((committed.count(), stats(committed).sizeInBytes.toLong))
+    // a projection of a committed frame is planned from estimates again
+    an[IllegalArgumentException] should be thrownBy
+      GraftSparkInternals.measured(committed.select($"s"))
+    an[IllegalArgumentException] should be thrownBy GraftSparkInternals.measured(raw)
+  }
+
+  "a loop that commits its self-joined state" should "plan from measured, not compounded, sizes" in {
+    // x ⋈ x ⋈ x each round: an estimate inherited through the checkpoint
+    // would be cubed every round (≈ S^(3^12) bytes by round 12)
+    var x = GraftSparkInternals.commit(spark.range(0, 50).select($"id", ($"id" * 3).as("v")))
+    def round(x: DataFrame): DataFrame = {
+      val y = x.select($"id", $"v".as("v2"))
+      val z = x.select($"id", $"v".as("v3"))
+      x.join(y, "id").join(z, "id").select($"id", ($"v" + $"v2" - $"v3").as("v"))
+    }
+    for (_ <- 1 to 12) x = GraftSparkInternals.commit(round(x))
+    GraftSparkInternals.measured(x)._1 shouldBe 50
+    val next = round(x)
+    val t0 = System.nanoTime()
+    next.queryExecution.executedPlan // join selection reads the size estimates
+    val planMs = (System.nanoTime() - t0) / 1e6
+    next.queryExecution.optimizedPlan.stats.sizeInBytes should be < (BigInt(1) << 60)
+    planMs should be < 1000.0
   }
 }

@@ -147,6 +147,21 @@ class SparqlEndpointSpec extends SparkSpec {
     } finally s2.stop()
   }
 
+  it should "type a blank-node subject as bnode, not uri" in {
+    val s2 = SparqlEndpoint.start(Seq(
+      ("_:b1", "u:p", "v", 2.toByte, null: String, null: String, "g1"),
+      ("u:a", "u:p", "v", 2.toByte, null: String, null: String, "g1"))
+      .toDF("s", "p", "o", "oKind", "oDt", "oLang", "g"))
+    try {
+      val q = """SELECT ?x WHERE { ?x <u:p> "v" }"""
+      val json = get(s2, q).body()
+      json should include(""""x":{"type":"bnode","value":"_:b1"}""")
+      json should include(""""x":{"type":"uri","value":"u:a"}""")
+      get(s2, q, accept = "application/sparql-results+xml").body() should
+        include("""<binding name="x"><bnode>_:b1</bnode></binding>""")
+    } finally s2.stop()
+  }
+
   it should "serve numeric aggregate projections as complete literal bindings" in
     withServer { server =>
       // the AgentMatchEnricher query shape (reference

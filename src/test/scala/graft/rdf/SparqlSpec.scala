@@ -553,6 +553,16 @@ class SparqlSpec extends SparkSpec {
     kinds("p:who") shouldBe Quad.IRI
   }
 
+  it should "keep a blank-node subject a blank node in object position" in {
+    val store = Seq(("_:b1", "u:p", "v", Quad.LITERAL, null: String, null: String, "g1"))
+      .toDF("s", "p", "o", "oKind", "oDt", "oLang", "g")
+    val g = Sparql.construct(store, """CONSTRUCT { <u:a> <u:q> ?x } WHERE { ?x <u:p> "v" }""")
+    val Array((o, kind)) = g.select("o", "oKind").as[(String, Byte)].collect()
+    kind shouldBe Quad.BNODE
+    // N-Quads: `_:b1`, not the invalid `<_:b1>`
+    graft.sources.NTriples.fmtTerm(o, kind, null, null) shouldBe "_:b1"
+  }
+
   it should "carry literal datatype and language tags through CONSTRUCT" in {
     val store = Seq(
       ("e1", "schema:startDate", "2024-03-12T08:30:00Z", Quad.LITERAL,
