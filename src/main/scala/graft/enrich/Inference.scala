@@ -58,26 +58,21 @@ object Inference {
     * to IRI except `_:`-prefixed terms, which keep the blank-node kind
     * the N-Triples convention implies. */
   def infer(quads: DataFrame, rules: Rules, maxIterations: Int = 30): DataFrame = {
+    // subjects are resources by construction; recover the bnode/IRI split
+    // from the `_:` label convention when one becomes an object
+    def subjectAsObject(s: Column): Seq[Column] = Seq(
+      graft.rdf.Bgp.resourceKind(s).as("oKind"),
+      lit(null).cast("string").as("oDt"),
+      lit(null).cast("string").as("oLang"))
     val kindCols = Seq("oKind", "oDt", "oLang")
     val cols = Seq("s", "p", "o") ++ kindCols
     val withKinds =
       if (quads.columns.contains("oKind"))
         quads.select(cols.map(col): _*)
-      else quads.select(col("s"), col("p"), col("o"),
-        when(col("o").startsWith("_:"), lit(graft.rdf.Quad.BNODE))
-          .otherwise(lit(graft.rdf.Quad.IRI)).as("oKind"),
-        lit(null).cast("string").as("oDt"),
-        lit(null).cast("string").as("oLang"))
+      else quads.select(Seq(col("s"), col("p"), col("o")) ++ subjectAsObject(col("o")): _*)
     val base = GraftSparkInternals.commit(withKinds.distinct())
 
     val isResource = col("oKind") =!= graft.rdf.Quad.LITERAL
-    // subjects are resources by construction; recover the bnode/IRI split
-    // from the `_:` label convention when one becomes an object
-    def subjectAsObject(s: Column): Seq[Column] = Seq(
-      when(s.startsWith("_:"), lit(graft.rdf.Quad.BNODE))
-        .otherwise(lit(graft.rdf.Quad.IRI)).as("oKind"),
-      lit(null).cast("string").as("oDt"),
-      lit(null).cast("string").as("oLang"))
     def carry(prefix: String): Seq[Column] =
       kindCols.map(c => col(s"$prefix.$c").as(c))
 

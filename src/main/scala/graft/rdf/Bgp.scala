@@ -21,15 +21,15 @@ object Bgp {
   private def isVar(t: String) = t.startsWith("?")
 
   /** Compile one triple pattern: filter on constants, project variables. */
-  def scan(quads: DataFrame, pat: Pattern): DataFrame = scanMeta(quads, pat, None)
+  def scan(quads: DataFrame, pat: Pattern): DataFrame = scanMeta(quads, pat, Set.empty)
 
-  /** [[scan]], optionally carrying the OBJECT term's metadata columns
-    * (`__dt_v`, `__lang_v`, `__kind_v`) for a variable `v` bound in object
-    * position — the substrate for SPARQL's LANG()/DATATYPE()/isIRI()
-    * builtins, which need more than the lexical form. Projected only on
-    * demand (the compiler asks for exactly the variables those builtins
-    * mention) so ordinary BGPs keep their narrow column pruning. */
-  def scanMeta(quads: DataFrame, pat: Pattern, objMeta: Option[String]): DataFrame = {
+  /** [[scan]], carrying the term metadata columns (`__kind_v`, `__dt_v`,
+    * `__lang_v`) of each variable `v` in `meta`: an object's stored
+    * `oKind`/`oDt`/`oLang`, an IRI for a predicate, [[resourceKind]] for a
+    * subject or graph. SPARQL's LANG()/DATATYPE()/isIRI() and a served
+    * binding's term type need more than the lexical form; projected only
+    * on demand so ordinary BGPs keep their narrow column pruning. */
+  def scanMeta(quads: DataFrame, pat: Pattern, meta: Set[String]): DataFrame = {
     val bindings = Seq("s" -> pat.s, "p" -> pat.p, "o" -> pat.o) ++
       pat.g.map(g => Seq("g" -> g)).getOrElse(Nil)
     val filtered = bindings.foldLeft(quads) { case (df, (colName, term)) =>
@@ -52,23 +52,30 @@ object Bgp {
         case (d, _) => d
       }
     }
-    val metaCols = objMeta match {
-      case Some(v) if pat.o == "?" + v =>
-        Seq(col("oDt").as(s"__dt_$v"), col("oLang").as(s"__lang_$v"),
-          col("oKind").as(s"__kind_$v"))
-      case _ => Nil
+    val metaCols = varCols.filter(vc => meta(vc._1)).flatMap { case (v, c) =>
+      val (kind, dt, lang) =
+        if (pat.o == "?" + v) (col("oKind"), col("oDt"), col("oLang"))
+        else if (pat.p == "?" + v) (lit(Quad.IRI), lit(null), lit(null))
+        else (resourceKind(col(c)), lit(null), lit(null))
+      Seq(kind.cast("byte").as(s"__kind_$v"), dt.cast("string").as(s"__dt_$v"),
+        lang.cast("string").as(s"__lang_$v"))
     }
     selfFiltered.select(projections.distinct ++ metaCols: _*)
   }
+
+  /** Kind of a term standing as a subject or graph: a blank node when it
+    * carries a `_:` label, an IRI otherwise. */
+  private[graft] def resourceKind(term: Column): Column =
+    when(term.startsWith("_:"), lit(Quad.BNODE)).otherwise(lit(Quad.IRI))
 
   /** Join a chain of patterns on their shared variables (natural join). */
   def bgp(quads: DataFrame, patterns: Pattern*): DataFrame =
     bgpMeta(quads, patterns, Set.empty)
 
   /** [[bgp]] with term metadata carried for the listed variables: the
-    * FIRST pattern binding such a variable in object position projects
-    * its metadata (later duplicates join on the lexical value only, as
-    * this engine does everywhere).
+    * first pattern binding such a variable in object position, else the
+    * first binding it at all, projects its metadata (later duplicates
+    * join on the lexical value only, as this engine does everywhere).
     *
     * Join ORDER is chosen greedily, RDF4J-optimizer style: start at the
     * pattern with the most constant positions (most selective under the
@@ -82,13 +89,13 @@ object Bgp {
     * authored first-appearance order (callers decode positionally). */
   def bgpMeta(quads: DataFrame, patterns: Seq[Pattern],
       metaVars: Set[String]): DataFrame = {
-    val claimed = scala.collection.mutable.Set[String]()
-    val scans = patterns.map { p =>
-      val mv = Option(p.o).filter(_.startsWith("?")).map(_.drop(1))
-        .filter(v => metaVars(v) && !claimed(v))
-      mv.foreach(claimed += _)
+    val claims = metaVars.groupBy { v =>
+      val obj = patterns.indexWhere(_.o == "?" + v)
+      if (obj >= 0) obj else patterns.indexWhere(p => (Seq(p.s, p.p, p.o) ++ p.g).contains("?" + v))
+    }
+    val scans = patterns.zipWithIndex.map { case (p, i) =>
       val consts = (Seq(p.s, p.p, p.o) ++ p.g).count(t => !isVar(t))
-      (scanMeta(quads, p, mv), consts)
+      (scanMeta(quads, p, claims.getOrElse(i, Set.empty)), consts)
     }
     val authoredCols = scans.flatMap(_._1.columns).distinct
     val remaining = scala.collection.mutable.ArrayBuffer.tabulate(scans.size)(identity)
@@ -121,11 +128,13 @@ object Bgp {
   }
 
   /** UNION of two binding sets (bag semantics, SURVEY Q4): columns are
-    * aligned by name, missing vars become nulls. */
+    * aligned by name, and a column one side lacks becomes a null of the
+    * other side's type. */
   def union(a: DataFrame, b: DataFrame): DataFrame = {
+    val types = (b.schema.fields ++ a.schema.fields).map(f => f.name -> f.dataType).toMap
     val cols = (a.columns ++ b.columns).distinct.toSeq
     def pad(df: DataFrame) = df.select(cols.map(c =>
-      if (df.columns.contains(c)) col(c) else lit(null).cast("string").as(c)): _*)
+      if (df.columns.contains(c)) col(c) else lit(null).cast(types(c)).as(c)): _*)
     pad(a).union(pad(b))
   }
 

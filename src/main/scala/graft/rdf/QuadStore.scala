@@ -49,7 +49,8 @@ object QuadStore {
     added.join(negations.select("s", "p", "o").distinct(), Seq("s", "p", "o"), "left_anti")
 
   /** Apply a diff to a store version (batch MERGE semantics of T2) and
-    * return the new version committed ([[commit]]: one job, right-sized,
+    * return the new version committed ([[commit]]: one measuring job, after
+    * a job per exchange of the diff's joins under AQE; right-sized,
     * planned from its measured size). This is the one way a store version
     * is made from a diff — the pipeline's batch step and enrichers, SPARQL
     * UPDATE, write-back routing and sync deltas all go through it — so a

@@ -60,8 +60,9 @@ import org.apache.spark.sql.functions._
   *            isBlank — used by FILTER(expr), BIND(expr AS ?v) and
   *            SELECT (expr AS ?v). Subtraction needs spaces (`?a - ?b`):
   *            '-' stays inside tokens so negative numbers and hyphenated
-  *            barewords lex whole. LANG/DATATYPE/isIRI read term metadata
-  *            carried from triple object positions ([[Bgp.bgpMeta]]).
+  *            barewords lex whole. LANG/DATATYPE/isIRI read the term
+  *            metadata a variable carries from the scan that binds it
+  *            ([[Bgp.scanMeta]]) through the algebra.
   * }}}
   */
 object Sparql {
@@ -691,25 +692,54 @@ object Sparql {
     * `+`, `?` and `{n,m}` are sets. Closure is the budgeted transitive
     * closure, zero-length the node-identity relation over every term of
     * the scoped graph (§9.3). All operators stay relational — the same
-    * shuffles a hand-written join chain would plan. */
-  private def pathPairs(quads: DataFrame, ast: PathAst,
-      graph: Option[String]): DataFrame = {
+    * shuffles a hand-written join chain would plan. `srcKind`/`dstKind`
+    * add an end's term kind as a column of that name: a link's src is a
+    * resource and its dst has its `oKind`, `^` swaps them, and the ends
+    * of a set of pairs take one kind per node (IRI, then blank node). */
+  private def pathPairs(quads: DataFrame, ast: PathAst, graph: Option[String],
+      srcKind: Boolean, dstKind: Boolean): DataFrame = {
     val scoped = graph.map(g => quads.where(col("g") === termValue(g))).getOrElse(quads)
     lazy val identity = scoped.select(col("s").as("src"))
       .union(scoped.select(col("o").as("src"))).distinct()
       .select(col("src"), col("src").as("dst"))
+    lazy val nodes = scoped.select(col("s").as("n"), Bgp.resourceKind(col("s")).as("k"))
+      .union(scoped.select(col("o").as("n"), col("oKind").as("k")))
+    def ends(df: DataFrame, src: Column, dst: Column,
+        sk: Option[Column], dk: Option[Column]): DataFrame =
+      df.select(Seq(src.as("src"), dst.as("dst")) ++
+        sk.map(_.as("srcKind")) ++ dk.map(_.as("dstKind")): _*)
+    def link(pred: Column, ks: Boolean, kd: Boolean): DataFrame =
+      ends(scoped.where(pred), col("s"), col("o"),
+        Option.when(ks)(Bgp.resourceKind(col("s"))), Option.when(kd)(col("oKind")))
     def closure(x: PathAst): DataFrame =
       graft.graph.GraphOps.transitiveClosure(eval(x)).select(col("src"), col("dst"))
-    def eval(e: PathAst): DataFrame = e match {
-      case PLink(p) => scoped.where(col("p") === termValue(p))
-        .select(col("s").as("src"), col("o").as("dst"))
-      case PNeg(preds) => scoped.where(!col("p").isin(preds.map(termValue): _*))
-        .select(col("s").as("src"), col("o").as("dst"))
-      case PInv(x) => eval(x).select(col("dst").as("src"), col("src").as("dst"))
-      case PAlt(l, r) => eval(l).unionByName(eval(r))
+    // each end takes the least kind its node has in the repeated step's
+    // pairs (or anywhere in scope, with zero-length pairs)
+    def nodeKinds(pairs: DataFrame, x: PathAst, zeroLength: Boolean,
+        ks: Boolean, kd: Boolean): DataFrame = {
+      val step = eval(x, ks = true, kd = true)
+      val stepNodes = step.select(col("src").as("n"), col("srcKind").as("k"))
+        .union(step.select(col("dst").as("n"), col("dstKind").as("k")))
+      val kinds = (if (zeroLength) stepNodes.union(nodes) else stepNodes)
+        .groupBy("n").agg(min("k").as("k"))
+      def attach(df: DataFrame, end: String, on: Boolean) =
+        if (!on) df
+        else df.join(kinds.select(col("n").as(end), col("k").as(end + "Kind")), Seq(end))
+      attach(attach(pairs, "src", ks), "dst", kd)
+    }
+    def eval(e: PathAst, ks: Boolean = false, kd: Boolean = false): DataFrame = e match {
+      case PLink(p) => link(col("p") === termValue(p), ks, kd)
+      case PNeg(preds) => link(!col("p").isin(preds.map(termValue): _*), ks, kd)
+      case PInv(x) => ends(eval(x, kd, ks), col("dst"), col("src"),
+        Option.when(ks)(col("dstKind")), Option.when(kd)(col("srcKind")))
+      case PAlt(l, r) => eval(l, ks, kd).unionByName(eval(r, ks, kd))
       case PSeq(l, r) =>
-        eval(l).alias("a").join(eval(r).alias("b"), col("a.dst") === col("b.src"))
-          .select(col("a.src").as("src"), col("b.dst").as("dst"))
+        ends(eval(l, ks, kd = false).alias("a")
+            .join(eval(r, ks = false, kd).alias("b"), col("a.dst") === col("b.src")),
+          col("a.src"), col("b.dst"),
+          Option.when(ks)(col("a.srcKind")), Option.when(kd)(col("b.dstKind")))
+      case PClosure(x, mod) if ks || kd => nodeKinds(eval(e), x, mod != '+', ks, kd)
+      case PRangeP(x, lo, _) if ks || kd => nodeKinds(eval(e), x, lo == 0, ks, kd)
       case PClosure(x, '+') => closure(x).distinct()
       case PClosure(x, '*') => closure(x).union(identity).distinct()
       case PClosure(x, _) => // '?'
@@ -739,7 +769,7 @@ object Sparql {
         val base = levels.reduceLeft(_ union _)
         (if (lo > 0) base else base.union(identity)).distinct()
     }
-    eval(ast)
+    eval(ast, srcKind, dstKind)
   }
 
   /** Whether every solution of `group` binds every variable it mentions:
@@ -752,18 +782,32 @@ object Sparql {
   }
 
   /** Bind a pair relation's ends to the path triple's subject and object:
-    * a constant filters its end, a variable names it, and `?x path ?x`
-    * keeps the pairs with `src = dst` under one column. */
-  private def bindPathEnds(pairs: DataFrame, s: String, o: String): DataFrame =
+    * a constant filters its end, a variable names it (an end's kind
+    * becomes its metadata), and `?x path ?x` keeps the pairs with
+    * `src = dst` under one column. */
+  private def bindPathEnds(pairs: DataFrame, s: String, o: String): DataFrame = {
+    def name(df: DataFrame, end: String, v: String): DataFrame = {
+      val named = df.withColumnRenamed(end, v)
+      if (!df.columns.contains(end + "Kind")) named
+      else withMeta(named, v, Seq(col(end + "Kind"), lit(null), lit(null))).drop(end + "Kind")
+    }
     if (s.startsWith("?") && s == o)
-      pairs.where(col("src") === col("dst")).select(col("src").as(s.drop(1)))
+      name(pairs.where(col("src") === col("dst")).drop("dst", "dstKind"), "src", s.drop(1))
     else {
       val withS =
-        if (s.startsWith("?")) pairs.withColumnRenamed("src", s.drop(1))
-        else pairs.where(col("src") === termValue(s)).drop("src")
-      if (o.startsWith("?")) withS.withColumnRenamed("dst", o.drop(1))
-      else withS.where(col("dst") === termValue(o)).drop("dst")
+        if (s.startsWith("?")) name(pairs, "src", s.drop(1))
+        else pairs.where(col("src") === termValue(s)).drop("src", "srcKind")
+      if (o.startsWith("?")) name(withS, "dst", o.drop(1))
+      else withS.where(col("dst") === termValue(o)).drop("dst", "dstKind")
     }
+  }
+
+  private def metaCols(v: String): Seq[String] = Seq(s"__kind_$v", s"__dt_$v", s"__lang_$v")
+
+  /** `df` with variable `v`'s metadata set to (kind, datatype, language). */
+  private def withMeta(df: DataFrame, v: String, meta: Seq[Column]): DataFrame =
+    df.withColumns(metaCols(v).zip(meta.zip(Seq("byte", "string", "string")).map {
+      case (c, t) => c.cast(t) }).toMap)
 
   /** `namedQuads` is the store GRAPH-scoped patterns see — it differs
     * from `quads` only under FROM/FROM NAMED dataset clauses (null =
@@ -802,12 +846,17 @@ object Sparql {
       join(Bgp.bgpMeta(quads,
         triples.map(t => toPattern(t.asInstanceOf[Triple], graph)), metaVars))
     rest.foreach {
-      case PathTriple(s, path, o) => join(bindPathEnds(pathPairs(quads, path, graph), s, o))
+      case PathTriple(s, path, o) =>
+        // an end asks for its kind unless the BGP already carries it
+        def asks(t: String) = t.startsWith("?") && metaVars(t.drop(1)) &&
+          !current.exists(_.columns.contains(s"__kind_${t.drop(1)}"))
+        join(bindPathEnds(pathPairs(quads, path, graph, asks(s), asks(o)), s, o))
       case Exists(inner, negated, minus) =>
         val left = current.getOrElse(sys.error("FILTER EXISTS without preceding bindings"))
-        val right = compileGroup(quads, inner, graph, metaVars, named)
-        // metadata columns are not solution variables: semi/anti join on
-        // the shared VARIABLES only (see dropDupMeta note)
+        // the inner group binds nothing outside: it carries metadata only
+        // for its own builtins, and the semi/anti join is on the shared
+        // VARIABLES only (see dropDupMeta note)
+        val right = compileGroup(quads, inner, graph, metaVarsOf(inner, Set.empty), named)
         val shared = left.columns.intersect(right.columns)
           .filterNot(isMetaCol).toSeq
         if (shared.isEmpty) {
@@ -845,7 +894,7 @@ object Sparql {
             else left.where(bound).join(right, shared, how)
               .unionByName(tolerant(left.where(!bound))))
         }
-      case SubSelect(q) => join(compileQuery(quads, q, named))
+      case SubSelect(q) => join(compileQuery(quads, q, named, metaVars))
       case Service(url, silent, raw) =>
         // SPARQL 1.1 federation: ship the inner group to the remote
         // endpoint as SELECT *, materialize its (bounded) binding set
@@ -871,58 +920,43 @@ object Sparql {
       case Bind(e, name) =>
         val df = current.getOrElse(sys.error("BIND without bindings"))
         val bound = Bgp.bind(df, name, exprColumn(e, df))
-        // STRLANG/STRDT construct literals with term METADATA — carry it
-        // in the same __lang_/__dt_/__kind_ side columns triple-object
-        // bindings use, so LANG()/DATATYPE()/isLiteral() downstream see
-        // the constructed type
-        current = Some(e match {
-          case ECall("STRLANG", List(_, l)) =>
-            bound.withColumn(s"__lang_$name", exprColumn(l, df).cast("string"))
-              .withColumn(s"__dt_$name", lit(null).cast("string"))
-              .withColumn(s"__kind_$name", lit(Quad.LITERAL))
-          case ECall("STRDT", List(_, d)) =>
-            bound.withColumn(s"__dt_$name", exprColumn(d, df).cast("string"))
-              .withColumn(s"__lang_$name", lit(null).cast("string"))
-              .withColumn(s"__kind_$name", lit(Quad.LITERAL))
-          case _ => bound
-        })
+        current = Some(if (metaVars(name)) withMeta(bound, name, exprMeta(e, df)) else bound)
       case Values(names, rows) =>
         val df = current.getOrElse(sys.error("VALUES without bindings"))
+        // an inline table (a LocalRelation, broadcast-trivial) joined on
+        // the variables the group already binds; a token's term comes from
+        // its syntax ([[groundKind]]). SPARQL 1.1 §10.2: UNDEF leaves a
+        // position unbound — that row is COMPATIBLE with any value of the
+        // variable, so the join predicate is (table.v IS NULL OR table.v =
+        // group.v) per shared variable, and the merged solution takes
+        // whichever side is bound (coalesce).
+        import org.apache.spark.sql.types.{ByteType, StringType, StructField, StructType}
         val hasUndef = rows.exists(_.contains("UNDEF"))
-        if (names.size == 1 && !hasUndef)
-          current = Some(Bgp.values(df, names.head, rows.map(r => termValue(r.head))))
-        else {
-          // multi-variable inline table: a LocalRelation joined on the
-          // variables the group already binds (broadcast-trivial).
-          // SPARQL 1.1 §10.2: UNDEF leaves a position unbound — that row
-          // is COMPATIBLE with any value of the variable, so the join
-          // predicate is (table.v IS NULL OR table.v = group.v) per
-          // shared variable, and the merged solution takes whichever
-          // side is bound (coalesce).
-          val spark = df.sparkSession
-          val schema = org.apache.spark.sql.types.StructType(names.map(n =>
-            org.apache.spark.sql.types.StructField(n,
-              org.apache.spark.sql.types.StringType)))
-          val data = new java.util.ArrayList[org.apache.spark.sql.Row]()
-          rows.foreach(r => data.add(org.apache.spark.sql.Row.fromSeq(
-            r.map(v => if (v == "UNDEF") null else termValue(v)))))
-          val tdf = spark.createDataFrame(data, schema)
-          val shared = names.filter(df.columns.contains)
-          current = Some(
-            if (shared.isEmpty) df.crossJoin(tdf)
-            else if (!hasUndef) df.join(tdf, shared)
-            else {
-              val t = shared.foldLeft(tdf) { (acc, v) => acc.withColumnRenamed(v, s"__v_$v") }
-              val cond = shared.map(v =>
-                t(s"__v_$v").isNull || t(s"__v_$v") === df(v)).reduce(_ && _)
-              val joined = df.join(org.apache.spark.sql.functions.broadcast(t), cond)
-              val merged = shared.foldLeft(joined) { (acc, v) =>
-                acc.withColumn(v,
-                  org.apache.spark.sql.functions.coalesce(acc(v), acc(s"__v_$v")))
-              }
-              merged.drop(shared.map(v => s"__v_$v"): _*)
-            })
-        }
+        val kinded = names.filter(n => metaVars(n) && !df.columns.contains(s"__kind_$n"))
+        def term(v: String): Seq[Any] =
+          if (v == "UNDEF") Seq(null, null, null)
+          else { val (_, dt, lang) = literalParts(v); Seq(groundKind(v), dt, lang) }
+        val tdf = df.sparkSession.createDataFrame(
+          java.util.Arrays.asList(rows.map(r => org.apache.spark.sql.Row.fromSeq(
+            r.map(v => if (v == "UNDEF") null else termValue(v)) ++
+              kinded.flatMap(n => term(r(names.indexOf(n)))))): _*),
+          StructType((names.map((_, StringType)) ++ kinded.flatMap(n =>
+            metaCols(n).zip(Seq(ByteType, StringType, StringType))))
+            .map { case (n, t) => StructField(n, t) }))
+        val shared = names.filter(df.columns.contains)
+        current = Some(
+          if (shared.isEmpty) df.crossJoin(tdf)
+          else if (!hasUndef) df.join(broadcast(tdf), shared)
+          else {
+            val t = shared.foldLeft(tdf) { (acc, v) => acc.withColumnRenamed(v, s"__v_$v") }
+            val cond = shared.map(v =>
+              t(s"__v_$v").isNull || t(s"__v_$v") === df(v)).reduce(_ && _)
+            val joined = df.join(broadcast(t), cond)
+            val merged = shared.foldLeft(joined) { (acc, v) =>
+              acc.withColumn(v, coalesce(acc(v), acc(s"__v_$v")))
+            }
+            merged.drop(shared.map(v => s"__v_$v"): _*)
+          })
       case _: Triple => () // already handled
     }
     current.getOrElse(sys.error("empty group"))
@@ -945,30 +979,62 @@ object Sparql {
   private val RdfLangString = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
 
   /** Variables whose term METADATA (datatype/lang/kind) an expression
-    * needs — LANG/DATATYPE/isIRI-family arguments. The group compiler
-    * projects exactly these through [[Bgp.bgpMeta]]. */
+    * needs — LANG/DATATYPE/isIRI-family arguments. */
   private val MetaFns = Set("LANG", "DATATYPE", "ISIRI", "ISURI", "ISLITERAL", "ISBLANK")
-  private def metaVarsOf(e: Expr): Set[String] = e match {
+  private def builtinVars(e: Expr): Set[String] = e match {
     case ECall(fn, List(EVar(v))) if MetaFns(fn) => Set(v)
-    case ECall(_, args) => args.flatMap(metaVarsOf).toSet
-    case EBin(_, l, r) => metaVarsOf(l) ++ metaVarsOf(r)
-    case ENot(x) => metaVarsOf(x)
-    case ENeg(x) => metaVarsOf(x)
+    case ECall(_, args) => args.flatMap(builtinVars).toSet
+    case EBin(_, l, r) => builtinVars(l) ++ builtinVars(r)
+    case ENot(x) => builtinVars(x)
+    case ENeg(x) => builtinVars(x)
     case _ => Set.empty
   }
-  private def metaVarsOfElems(elems: List[Element]): Set[String] = elems.flatMap {
-    case FilterCond(e) => metaVarsOf(e)
-    case Bind(e, _) => metaVarsOf(e)
-    case Opt(g) => metaVarsOfElems(g)
-    case Graphed(_, g) => metaVarsOfElems(g)
-    case Union(l, r) => metaVarsOfElems(l) ++ metaVarsOfElems(r)
-    case Exists(g, _, _) => metaVarsOfElems(g)
-    case SubSelect(q) => metaVarsOfQuery(q)
-    case _ => Set.empty[String]
-  }.toSet
-  private def metaVarsOfQuery(q: Query): Set[String] =
-    metaVarsOfElems(q.group) ++
-      q.items.collect { case ExprItem(e, _) => metaVarsOf(e) }.flatten
+
+  /** Variables whose term an expression's value can be: a variable, and
+    * the arms of IF and COALESCE (see [[exprMeta]]). */
+  private def kindSources(e: Expr): Set[String] = e match {
+    case EVar(v) => Set(v)
+    case ECall("IF", List(_, t, f)) => kindSources(t) ++ kindSources(f)
+    case ECall("COALESCE", as) => as.flatMap(kindSources).toSet
+    case _ => Set.empty
+  }
+
+  /** Aggregates that choose one of their values, and keep its term. */
+  private val TermAggs = Set("MIN", "MAX", "SAMPLE")
+
+  /** A group's FILTER and BIND expressions (not its sub-selects'), with
+    * the variable each binds. */
+  private def exprsOf(elems: List[Element]): List[(Option[String], Expr)] = elems.flatMap {
+    case FilterCond(e) => List(None -> e)
+    case Bind(e, v) => List(Some(v) -> e)
+    case Opt(g) => exprsOf(g)
+    case Graphed(_, g) => exprsOf(g)
+    case Union(l, r) => exprsOf(l) ++ exprsOf(r)
+    case Exists(g, _, _) => exprsOf(g)
+    case _ => Nil
+  }
+
+  /** The variables whose metadata a group carries: the `asked` ones, the
+    * builtins' arguments, and those a BIND, a SELECT expression or a
+    * MIN/MAX/SAMPLE in `items` takes such a variable's term from. */
+  private def metaVarsOf(group: List[Element], asked: Set[String],
+      items: Seq[SelectItem] = Nil): Set[String] = {
+    val exprs = exprsOf(group) ++ items.collect { case ExprItem(e, a) => Some(a) -> e }
+    val flows = exprs.collect { case (Some(v), e) => v -> kindSources(e) } ++
+      items.collect { case AggItem(fn, arg, _, a, _) if TermAggs(fn) => a -> Set(arg.drop(1)) }
+    @annotation.tailrec def close(vars: Set[String]): Set[String] = {
+      val next = vars ++ flows.filter(f => vars(f._1)).flatMap(_._2)
+      if (next == vars) vars else close(next)
+    }
+    close(asked ++ exprs.flatMap(x => builtinVars(x._2)))
+  }
+
+  /** The variables a SELECT list projects (none for `SELECT *`). */
+  private def projectedVars(q: Query): Seq[String] = q.items.map {
+    case PlainVar(v) => v
+    case a: AggItem => a.alias
+    case ExprItem(_, a) => a
+  }
 
   private def isNumericTok(t: String) = t.matches("-?[0-9]+(\\.[0-9]+)?")
 
@@ -1025,6 +1091,31 @@ object Sparql {
         case ">=" => lc >= rc
       }
     case ECall(fn, args) => callColumn(fn, args, df, aggEnv)
+  }
+
+  /** (kind, datatype, language) of an expression's value: a variable's own
+    * (also as an arm of IF or COALESCE); IRI for `<iri>`, IRI(), URI();
+    * BNODE() a blank node; STRLANG/STRDT a tagged/typed literal. Any other
+    * value has no kind: a literal to the builtins, shape-typed when served. */
+  private def exprMeta(e: Expr, df: DataFrame,
+      aggEnv: Map[EAgg, String] = Map.empty): Seq[Column] = {
+    def ec(x: Expr) = exprColumn(x, df, aggEnv)
+    def meta(x: Expr) = exprMeta(x, df, aggEnv)
+    def either(c: Column, a: Seq[Column], b: Seq[Column]) =
+      a.zip(b).map(x => when(c, x._1).otherwise(x._2))
+    val none = lit(null)
+    e match {
+      case EVar(v) if df.columns.contains(s"__kind_$v") => metaCols(v).map(col)
+      case ETerm(t) if t.startsWith("<") => Seq(lit(Quad.IRI), none, none)
+      case ECall("IRI" | "URI", _) => Seq(lit(Quad.IRI), none, none)
+      case ECall("BNODE", Nil) => Seq(lit(Quad.BNODE), none, none)
+      case ECall("STRLANG", List(_, l)) => Seq(lit(Quad.LITERAL), none, ec(l))
+      case ECall("STRDT", List(_, d)) => Seq(lit(Quad.LITERAL), ec(d), none)
+      case ECall("IF", List(c, t, f)) => either(ec(c), meta(t), meta(f))
+      case ECall("COALESCE", as) => // the first bound argument's term
+        as.foldRight(Seq(none, none, none))((a, rest) => either(ec(a).isNotNull, meta(a), rest))
+      case _ => Seq(none, none, none)
+    }
   }
 
   /** Execute a SERVICE group against a remote SPARQL endpoint and parse
@@ -1125,14 +1216,17 @@ object Sparql {
 
   private def metaCol(df: DataFrame, prefix: String, v: String, fn: String): Column = {
     require(df.columns.contains(s"__${prefix}_$v"),
-      s"$fn(?$v): term metadata unavailable — ?$v is not bound by a triple object " +
-        "position (paths and computed bindings carry no datatype/lang/kind)")
+      s"$fn(?$v): term metadata unavailable — ?$v is unbound in this scope or " +
+        "bound by SERVICE, which carries lexical values only")
     col(s"__${prefix}_$v")
   }
 
   private def callColumn(fn: String, args: List[Expr], df: DataFrame,
       aggEnv: Map[EAgg, String]): Column = {
     def ec(e: Expr): Column = exprColumn(e, df, aggEnv)
+    // a bound value without a kind is computed: a literal
+    def kindOf(v: String): Column =
+      when(col(v).isNotNull, coalesce(metaCol(df, "kind", v, fn), lit(Quad.LITERAL)))
     (fn, args) match {
       // STR: lexical form — this store keeps IRIs and literals as their
       // lexical form already, so STR is the string cast
@@ -1142,7 +1236,7 @@ object Sparql {
       case ("DATATYPE", List(EVar(v))) =>
         when(metaCol(df, "lang", v, "DATATYPE").isNotNull, lit(RdfLangString))
           .when(metaCol(df, "dt", v, "DATATYPE").isNotNull, metaCol(df, "dt", v, "DATATYPE"))
-          .when(metaCol(df, "kind", v, "DATATYPE") === lit(Quad.LITERAL), lit(XsdString))
+          .when(kindOf(v) === lit(Quad.LITERAL), lit(XsdString))
           .otherwise(lit(null).cast("string")) // DATATYPE of an IRI is an error -> unbound
       case ("LANGMATCHES", List(l, r)) =>
         val lang = ec(l)
@@ -1194,25 +1288,19 @@ object Sparql {
           ac.substr(instr(ac, sep) + lit(sep.codePointCount(0, sep.length)),
             lit(Int.MaxValue)))
           .otherwise(lit(""))
-      case ("ISIRI" | "ISURI", List(EVar(v))) =>
-        metaCol(df, "kind", v, fn) === lit(Quad.IRI)
-      case ("ISLITERAL", List(EVar(v))) =>
-        metaCol(df, "kind", v, fn) === lit(Quad.LITERAL)
-      case ("ISBLANK", List(EVar(v))) =>
-        metaCol(df, "kind", v, fn) === lit(Quad.BNODE)
+      case ("ISIRI" | "ISURI", List(EVar(v))) => kindOf(v) === lit(Quad.IRI)
+      case ("ISLITERAL", List(EVar(v))) => kindOf(v) === lit(Quad.LITERAL)
+      case ("ISBLANK", List(EVar(v))) => kindOf(v) === lit(Quad.BNODE)
       case ("ISNUMERIC", List(a)) =>
         // castable-to-double test (SPARQL: value is of a numeric type);
         // try_cast, because under ANSI a plain cast THROWS on non-numerics
         ec(a).try_cast(org.apache.spark.sql.types.DoubleType).isNotNull
       case ("SAMETERM", List(l, r)) => ec(l) === ec(r)
       // term constructors: values here are lexical forms, so IRI/URI is
-      // the identity on the string (term kind is carried separately and
-      // only matters at serialization)
+      // the identity on the string; the kind, and the lang/datatype of
+      // STRLANG/STRDT, ride the metadata columns of the variable the
+      // result is bound to ([[exprMeta]])
       case ("IRI" | "URI", List(a)) => ec(a).cast("string")
-      // literal constructors: the VALUE is the first argument's lexical
-      // form; the lang/datatype metadata rides the __lang_/__dt_ side
-      // columns, attached where the result is BOUND to a variable (see
-      // the Bind case in compileGroup)
       case ("STRLANG", List(a, _)) => ec(a).cast("string")
       case ("STRDT", List(a, _)) => ec(a).cast("string")
       case ("BNODE", Nil) =>
@@ -1272,8 +1360,9 @@ object Sparql {
     }
   }
 
+  /** `terms`: projected variables whose metadata the output keeps. */
   private def compileQuery(quads: DataFrame, q: Query,
-      namedQuads: DataFrame = null): DataFrame = {
+      namedQuads: DataFrame = null, terms: Set[String] = Set.empty): DataFrame = {
     // FROM/FROM NAMED restrict the dataset: with any clause present, the
     // default graph is exactly the FROM merge (empty if none) and the
     // named-graph set exactly FROM NAMED (empty if none) — SPARQL 1.1
@@ -1286,7 +1375,9 @@ object Sparql {
         else quads.limit(0),
         if (q.fromNamed.nonEmpty) quads.filter(col("g").isin(q.fromNamed: _*))
         else quads.limit(0))
-    var df = compileGroup(defQ, q.group, None, metaVarsOfQuery(q), namQ)
+    val kept = if (q.items.isEmpty) terms else terms.intersect(projectedVars(q).toSet)
+    val metaVars = metaVarsOf(q.group, kept, q.items)
+    var df = compileGroup(defQ, q.group, None, metaVars, namQ)
     val aggItems = q.items.collect { case a: AggItem => a }
     // aggregates nested inside SELECT expressions become hidden agg
     // columns the expression references after grouping
@@ -1309,9 +1400,18 @@ object Sparql {
       q.orderBy.collect { case (k: AggKey, _) => k }.distinct
         .filter(inSelect(_).isEmpty)
         .zipWithIndex.map { case (k, i) => k -> s"__ord$i" }.toMap
+    // MIN/MAX/SAMPLE keep the term of the value they choose: an alias
+    // carrying metadata aggregates the (value, kind, datatype, language)
+    // struct, which orders by value first
+    val termAggs = aggItems.filter(a => TermAggs(a.fn) && metaVars(a.alias) &&
+      df.columns.contains(s"__kind_${a.arg.drop(1)}"))
     if (hasAggs) {
-      val aggCols = aggItems.map(a =>
-        aggColumn(a.fn, a.arg, a.distinct, a.sep).as(a.alias)) ++
+      val aggCols = aggItems.map { a =>
+        val v = a.arg.drop(1)
+        val term = when(col(v).isNotNull, struct((v +: metaCols(v)).map(col): _*))
+        (if (!termAggs.contains(a)) aggColumn(a.fn, a.arg, a.distinct, a.sep)
+         else if (a.fn == "MAX") max(term) else min(term)).as(a.alias)
+      } ++
         exprAggs.map { case (a, n) =>
           aggColumn(a.fn, a.arg, a.distinct, a.sep).as(n) }.toSeq ++
         hiddenOrd.map { case (k, n) =>
@@ -1319,7 +1419,13 @@ object Sparql {
         q.having.map(h =>
           aggColumn(h.fn, h.arg, distinct = h.distinct).as("__having")).toSeq
       require(aggCols.nonEmpty, "GROUP BY without aggregates in SELECT or ORDER BY")
-      df = df.groupBy(q.groupBy.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
+      // a GROUP BY variable groups on its whole term
+      val keys = q.groupBy ++ q.groupBy.flatMap(metaCols).filter(df.columns.contains)
+      df = df.groupBy(keys.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
+      df = termAggs.foldLeft(df) { (acc, a) =>
+        val (v, t) = (a.arg.drop(1), col(a.alias))
+        withMeta(acc, a.alias, metaCols(v).map(t(_))).withColumn(a.alias, t(v))
+      }
     }
     // HAVING filters the aggregated groups before projection
     q.having.foreach { h =>
@@ -1343,22 +1449,18 @@ object Sparql {
     // aliases (earlier SELECT items included)
     q.items.foreach {
       case ExprItem(e, alias) =>
-        df = df.withColumn(alias, exprColumn(e, df, exprAggs))
+        val value = exprColumn(e, df, exprAggs)
+        if (metaVars(alias)) df = withMeta(df, alias, exprMeta(e, df, exprAggs))
+        df = df.withColumn(alias, value)
       case _ => ()
     }
     // projection before ordering (hidden order columns are kept until after
-    // the sort, then dropped)
-    val projected: Seq[String] = q.items.map {
-      case PlainVar(v) => v
-      case AggItem(_, _, _, alias, _) => alias
-      case ExprItem(_, alias) => alias
-    }
-    if (projected.nonEmpty) {
-      val keep = projected ++ hiddenOrd.values.filter(df.columns.contains)
-      df = df.select(keep.distinct.map(col): _*)
-    } else
-      // SELECT *: internal metadata columns never surface
-      df.columns.filter(_.startsWith("__")).foreach(c => df = df.drop(c))
+    // the sort, then dropped); internal columns surface only as the kept
+    // metadata of projected variables
+    val projected =
+      if (q.items.isEmpty) df.columns.filterNot(_.startsWith("__")).toSeq else projectedVars(q)
+    val internal = projected.filter(kept).flatMap(metaCols) ++ hiddenOrd.values
+    df = df.select((projected ++ internal.filter(df.columns.contains)).distinct.map(col): _*)
     if (q.distinct) df = df.distinct()
     if (q.orderBy.nonEmpty) {
       val sortCols = q.orderBy.map { case (key, desc) =>
@@ -1382,6 +1484,18 @@ object Sparql {
   def select(quads: DataFrame, queryText: String): DataFrame = {
     val q = new P(expandPrefixes(tokenize(queryText))).query()
     compileQuery(quads, q)
+  }
+
+  /** [[select]], with each projected variable's term next to its value:
+    * `__kind_v` (a [[Quad]] kind; null for a computed value), `__dt_v`
+    * and `__lang_v` (a literal's datatype and language), carried from the
+    * scans that bind it, so it runs the jobs [[select]] would. */
+  def selectTerms(quads: DataFrame, queryText: String): DataFrame = {
+    val tokens = expandPrefixes(tokenize(queryText))
+    val q = new P(tokens).query()
+    // SELECT * projects every variable the query binds
+    compileQuery(quads, q, terms = (if (q.items.isEmpty) tokens.filter(_.startsWith("?"))
+      .map(_.drop(1)) else projectedVars(q)).toSet)
   }
 
   /** ASK variant (PREFIX headers allowed before the ASK keyword). */
@@ -1422,7 +1536,8 @@ object Sparql {
     * they carry a scheme prefix (`c:42`, `http://...`) — the store's
     * converters mint exactly such IRIs (a bare token can't contain
     * whitespace, the tokenizer split it) — and literals otherwise.
-    * VARIABLE bindings do NOT use this loose test: see [[instantiate]]. */
+    * VALUES tokens take their kind the same way. VARIABLE bindings do
+    * NOT use this loose test: see [[instantiate]]. */
   private def groundKind(tok: String): Byte =
     if (tok.startsWith("<")) Quad.IRI
     else if (tok.startsWith("\"")) Quad.LITERAL
@@ -1445,77 +1560,34 @@ object Sparql {
   /** Instantiate quad templates against a binding set; solutions leaving a
     * template position unbound (OPTIONAL) are skipped, per SPARQL.
     *
-    * Object-term kinds: ground template tokens are classified by syntax
-    * ([[groundKind]]). Variable-bound values carry their kind FROM THE
-    * STORE — a single join against the store's distinct IRI terms (every
-    * subject/predicate, plus objects with oKind=IRI) resolves any value
-    * the store knows; novel values (BIND results) fall back to the strict
-    * [[looksLikeIri]] shape test. The join-back runs only when a template
-    * object is a variable, and the IRI-term side is distinct-deduped, so
-    * at scale it costs one hash join keyed on the term string — the same
-    * order as the WHERE evaluation that produced the bindings. */
+    * Object terms: ground template tokens are classified by syntax
+    * ([[groundKind]]). A variable's binding brings its kind, datatype and
+    * language in the metadata columns the WHERE group carries for
+    * template objects ([[templateMetaVars]]); a value without a kind (a
+    * BIND result) falls back to the strict [[looksLikeIri]] shape test. */
   private def instantiate(bindings: DataFrame, templ: List[TemplQuad],
-      defaultGraph: String, store: DataFrame,
-      resolveKinds: Boolean = true): DataFrame = {
-    val raw = templ.map { case (s, p, o, g) =>
-      val (_, gDt, gLang) =
-        if (o.startsWith("\"")) literalParts(o) else (o, null, null)
+      defaultGraph: String): DataFrame =
+    templ.map { case (s, p, o, g) =>
+      val Seq(kind, dt, lang) =
+        if (o.startsWith("?")) exprMeta(EVar(o.drop(1)), bindings)
+        else {
+          val (_, gDt, gLang) = if (o.startsWith("\"")) literalParts(o) else (o, null, null)
+          Seq(lit(groundKind(o)), lit(gDt), lit(gLang))
+        }
       bindings.select(
         tExpr(s).as("s"), tExpr(p).as("p"), tExpr(o).as("o"),
-        (if (o.startsWith("?")) lit(null) else lit(groundKind(o)))
-          .cast("byte").as("__groundKind"),
-        lit(gDt).cast("string").as("oDt"),
-        lit(gLang).cast("string").as("oLang"),
+        coalesce(kind, when(tExpr(o).rlike(IriShapeRegex), lit(Quad.IRI))
+          .otherwise(lit(Quad.LITERAL))).cast("byte").as("oKind"),
+        dt.cast("string").as("oDt"), lang.cast("string").as("oLang"),
         // GRAPH ?g templates bind the graph per solution (tExpr);
         // unbound graph solutions are skipped by the na.drop like any
         // other unbound template position
         g.map(tExpr).getOrElse(lit(defaultGraph)).as("g"))
-    }.reduceLeft(_.unionByName(_)).na.drop(Seq("s", "p", "o", "g"))
-    val needResolve = resolveKinds && templ.exists(_._3.startsWith("?"))
-    val kinded =
-      if (!needResolve)
-        raw.withColumn("oKind",
-          coalesce(col("__groundKind"), lit(Quad.LITERAL)).cast("byte"))
-      else {
-        // term-metadata join-back: a predicate is an IRI, a subject an
-        // IRI or (`_:` label) a blank node; object occurrences carry their
-        // full (kind, datatype, language) so CONSTRUCTed literals keep
-        // ^^datatype / @lang in N-Quads output. One deterministic
-        // metadata row per term (IRI reading preferred, then smallest
-        // datatype/language).
-        val asResource = (c: String, kind: Column) => store.select(col(c).as("__term"),
-          kind.cast("byte").as("__mKind"),
-          lit(null).cast("string").as("__mDt"),
-          lit(null).cast("string").as("__mLang"))
-        val mw = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__term"))
-          .orderBy(col("__mKind").asc, col("__mDt").asc_nulls_first,
-            col("__mLang").asc_nulls_first)
-        val termMeta = store.select(col("o").as("__term"),
-            col("oKind").as("__mKind"), col("oDt").as("__mDt"),
-            col("oLang").as("__mLang"))
-          .unionByName(asResource("s",
-            when(col("s").startsWith("_:"), Quad.BNODE).otherwise(Quad.IRI)))
-          .unionByName(asResource("p", lit(Quad.IRI)))
-          .distinct()
-          .withColumn("__rk", row_number().over(mw)).where(col("__rk") === 1)
-          .drop("__rk")
-        val bound = col("__groundKind").isNull && col("__term").isNotNull
-        raw.join(termMeta, raw("o") === termMeta("__term"), "left")
-          .withColumn("oKind",
-            coalesce(col("__groundKind"),
-              when(col("__term").isNotNull, col("__mKind"))
-                .when(col("o").rlike(IriShapeRegex), lit(Quad.IRI))
-                .otherwise(lit(Quad.LITERAL))).cast("byte"))
-          .withColumn("oDt",
-            when(bound, col("__mDt")).otherwise(col("oDt")))
-          .withColumn("oLang",
-            when(bound, col("__mLang")).otherwise(col("oLang")))
-          .drop("__term", "__mKind", "__mDt", "__mLang")
-      }
-    kinded.select(col("s"), col("p"), col("o"), col("oKind"), col("oDt"),
-      col("oLang"), col("g")).distinct()
-  }
+    }.reduceLeft(_.unionByName(_)).na.drop(Seq("s", "p", "o", "g")).distinct()
+
+  /** Template objects' variables, whose terms [[instantiate]] reads. */
+  private def templateMetaVars(templ: List[TemplQuad]): Set[String] =
+    templ.map(_._3).filter(_.startsWith("?")).map(_.drop(1)).toSet
 
   /** Parse and run a SPARQL DESCRIBE: returns the store quads describing
     * each target resource — every statement where the resource stands as
@@ -1546,7 +1618,7 @@ object Sparql {
     val spark = quads.sparkSession
     import spark.implicits._
     val fromVars: Option[DataFrame] = group.map { g =>
-      val bindings = compileGroup(dsDef, g, None, metaVarsOfElems(g), dsNamed)
+      val bindings = compileGroup(dsDef, g, None, metaVarsOf(g, Set.empty), dsNamed)
       val names =
         if (star) bindings.columns.toSeq
         else vars.map(_.stripPrefix("?")).filter(bindings.columns.contains)
@@ -1585,16 +1657,16 @@ object Sparql {
         case _ => false
       })
       require(templ.nonEmpty, "empty CONSTRUCT WHERE pattern")
-      instantiate(compileGroup(quads, group, None, metaVarsOfElems(group)),
-        templ, ConstructedGraph, quads)
+      instantiate(compileGroup(quads, group, None,
+        metaVarsOf(group, templateMetaVars(templ))), templ, ConstructedGraph)
     } else {
       val templ = templQuads(p.block())
       require(templ.nonEmpty, "empty CONSTRUCT template")
       val (dsDef, dsNamed) = datasetClauses(p, quads)
       if (p.peek.equalsIgnoreCase("WHERE")) p.next()
       val group = p.block()
-      instantiate(compileGroup(dsDef, group, None, metaVarsOfElems(group), dsNamed),
-        templ, ConstructedGraph, quads)
+      instantiate(compileGroup(dsDef, group, None,
+        metaVarsOf(group, templateMetaVars(templ)), dsNamed), templ, ConstructedGraph)
     }
   }
 
@@ -1781,7 +1853,8 @@ object Sparql {
           if (p.peek.equalsIgnoreCase("INSERT")) { p.next(); templQuads(p.block()) } else Nil
         p.expect("WHERE")
         val group = p.block()
-        val bindings = compileGroup(store, group, None, metaVarsOfElems(group))
+        val bindings =
+          compileGroup(store, group, None, metaVarsOf(group, templateMetaVars(insTempl)))
         // DELETE WHERE { g } shorthand: the pattern is its own template
         val del = if (delTempl.isEmpty && insTempl.isEmpty) templQuads(group.filter {
           case _: Triple | _: Graphed => true
@@ -1794,22 +1867,19 @@ object Sparql {
             val parts =
               (if (global.nonEmpty)
                 Seq(matchRemovals(
-                  // removal keys never use oKind — skip the kind join
-                  instantiate(bindings, global, UserGraph, store,
-                    resolveKinds = false).select("s", "p", "o"),
+                  instantiate(bindings, global, UserGraph).select("s", "p", "o"),
                   withGraph = false))
               else Nil) ++
               (if (scoped.nonEmpty)
                 Seq(matchRemovals(
-                  instantiate(bindings, scoped, UserGraph, store,
-                    resolveKinds = false).select("s", "p", "o", "g"),
+                  instantiate(bindings, scoped, UserGraph).select("s", "p", "o", "g"),
                   withGraph = true))
               else Nil)
             parts.reduceLeft(_.unionByName(_)).distinct()
           }
         val added =
           if (insTempl.isEmpty) empty
-          else dedupAdds(instantiate(bindings, insTempl, UserGraph, store))
+          else dedupAdds(instantiate(bindings, insTempl, UserGraph))
         QuadDiff(added, removed)
       case t => sys.error(s"unsupported update operation: $t")
     }

@@ -6,8 +6,7 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicReference
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LogicalPlan, Offset, Project, Sort}
+import org.apache.spark.sql.{DataFrame, Row}
 import scala.jdk.CollectionConverters._
 
 /** SPARQL 1.1 Protocol endpoint over a quads DataFrame — the engine's
@@ -21,8 +20,11 @@ import scala.jdk.CollectionConverters._
   * SELECT results negotiate SPARQL JSON (default), XML
   * (`application/sparql-results+xml`), CSV (`text/csv`) or TSV
   * (`text/tab-separated-values`) via Accept — the reference resolves the
-  * writer the same way (`SparqlService.scala:170-201`). CONSTRUCT streams
-  * N-Quads lines. Malformed queries → 400 with the parse error.
+  * writer the same way (`SparqlService.scala:170-201`). JSON and XML
+  * serve each binding's term (kind, datatype, language) as the query
+  * carried it from its scan ([[Sparql.selectTerms]]), as the reference
+  * serves RDF4J `Value`s. CONSTRUCT streams N-Quads lines. Malformed
+  * queries → 400 with the parse error.
   *
   * Updates: POST with `update=...` form data or an
   * `application/sparql-update` body (`INSERT DATA` / `DELETE DATA` /
@@ -38,22 +40,19 @@ import scala.jdk.CollectionConverters._
   */
 object SparqlEndpoint {
 
-  /** One served store version plus its term-kind side table. The store
-    * is committed on construction ([[QuadStore.commit]]: materialized
-    * once, right-sized, planned from its measured size), so every request
-    * on this version scans in-memory blocks and Catalyst can broadcast a
-    * small store's BGP joins; constructing a snapshot of an already
-    * committed version runs no job. The term table is computed (and
-    * committed) at most ONCE per snapshot — the first JSON/XML SELECT
-    * pays three store scans + one aggregate, every later request on the
-    * same version reuses the materialized result. Updates swap in a fresh
-    * [[Snapshot]], so the cache can never serve a stale kind. */
+  /** One served store version. The store is committed on construction
+    * ([[QuadStore.commit]]: materialized once, right-sized, planned from
+    * its measured size), so every request on this version scans
+    * in-memory blocks and Catalyst can broadcast a small store's BGP
+    * joins; constructing a snapshot of an already committed version runs
+    * no job. Updates swap in a fresh [[Snapshot]]. */
   final class Snapshot(store: DataFrame) {
     val quads: DataFrame = QuadStore.commit(store)
 
     /** Distinct term → kind (IRI=0 wins ties: a term standing as a
       * predicate is an IRI, as a subject an IRI or, by its `_:` label, a
-      * blank node; object occurrences carry their stored kind). */
+      * blank node; object occurrences carry their stored kind). No
+      * request reads it; the serve benchmark's trace times it. */
     lazy val termKinds: DataFrame = {
       import org.apache.spark.sql.functions._
       QuadStore.commit(
@@ -146,56 +145,29 @@ object SparqlEndpoint {
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
       .replace("\"", "&quot;")
 
-  /** Attach authoritative term-kind columns (`__kind_<col>`) by joining
-    * each STRING-typed projected column back to the snapshot's cached
-    * term table. Protocol clients then get term types from DATA, exactly
-    * as the reference serves real RDF4J term kinds — the string-shape
-    * heuristic remains only for values the store never saw
-    * (BIND/expression results). Non-string columns (aggregates, numeric
-    * expressions) are never stored terms, and joining them against the
-    * string term table would make ANSI mode cast the term side to the
-    * numeric type and throw on the first IRI — so they are skipped and
-    * fall through to the literal default at serialization time.
-    * Cost: one hash join per string column against the per-version
-    * cached table (see [[Snapshot.termKinds]]) — no per-request scans.
-    *
-    * A join does not keep its input's order (Catalyst even drops a sort
-    * below a join as meaningless). An ORDER BY query's rows are therefore
-    * tagged with their position before the joins and re-sorted on the tag
-    * after them. */
-  private def withTermKinds(df: DataFrame, terms: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
-    import org.apache.spark.sql.types.StringType
-    val strCols =
-      df.schema.fields.filter(_.dataType == StringType).map(_.name)
-    val ordered = isOrdered(df.queryExecution.analyzed)
-    val tagged = if (ordered) df.withColumn("__ord", monotonically_increasing_id()) else df
-    val joined = strCols.foldLeft(tagged) { (acc, c) =>
-      val t = terms.select(col("__term").as(s"__t_$c"), col("__k").as(s"__kind_$c"))
-      acc.join(t, acc(c) === t(s"__t_$c"), "left").drop(s"__t_$c")
-    }
-    if (ordered) joined.orderBy(col("__ord")).drop("__ord") else joined
-  }
+  /** One bound variable of a result row: protocol term type, lexical
+    * value, and a literal's `xml:lang` or `datatype`, if it has one. */
+  private final case class Binding(tpe: String, value: String, tag: Option[(String, String)])
 
-  /** Whether a plan's rows come out of a global sort: a `Sort`, possibly
-    * under projections, LIMIT and OFFSET (how [[Sparql.select]] renders
-    * ORDER BY). */
-  private def isOrdered(plan: LogicalPlan): Boolean = plan match {
-    case s: Sort => s.global
-    case p: Project => isOrdered(p.child)
-    case l: GlobalLimit => isOrdered(l.child)
-    case l: LocalLimit => isOrdered(l.child)
-    case o: Offset => isOrdered(o.child)
-    case _ => false
-  }
-
-  /** Protocol term type for a bound value: stored kind when the store
-    * knows the term, strict IRI shape otherwise. */
-  private def termType(kind: Option[Byte], value: String): String = kind match {
-    case Some(Quad.IRI) => "uri"
-    case Some(Quad.BNODE) => "bnode"
-    case Some(_) => "literal"
-    case None => if (Sparql.looksLikeIri(value)) "uri" else "literal"
+  /** The projected variables of a [[Sparql.selectTerms]] frame, and the
+    * reader of a row's bindings (None where unbound). The term type is the
+    * carried kind, or the strict IRI shape for a computed value without one. */
+  private def bindings(df: DataFrame): (Seq[String], Row => Seq[Option[Binding]]) = {
+    val all = df.columns.toSeq
+    val vars = all.filterNot(_.startsWith("__"))
+    val idx = vars.map(v => Seq(v, s"__kind_$v", s"__dt_$v", s"__lang_$v").map(all.indexOf(_)))
+    (vars, row => idx.map { case Seq(vi, ki, di, li) =>
+      def at(i: Int): Option[Any] = if (i < 0 || row.isNullAt(i)) None else Some(row.get(i))
+      at(vi).map(_.toString).map { v =>
+        at(ki).getOrElse(if (Sparql.looksLikeIri(v)) Quad.IRI else Quad.LITERAL) match {
+          case Quad.IRI => Binding("uri", v, None)
+          case Quad.BNODE => Binding("bnode", v, None)
+          // an xsd:string literal is served plain, as RDF4J's writers do
+          case _ => Binding("literal", v, at(li).map("xml:lang" -> _.toString)
+            .orElse(at(di).filterNot(_ == Quad.Xsd.string).map("datatype" -> _.toString)))
+        }
+      }
+    })
   }
 
   private final class Handler(ref: AtomicReference[Snapshot]) extends HttpHandler {
@@ -259,19 +231,22 @@ object SparqlEndpoint {
               streamGraph(ex, df, "application/rdf+xml", graft.sources.RdfXml.writeStream)
             else streamNQuads(ex, df)
           case (Some(q), _) =>
+            val accept = Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
+            val (csv, tsv) =
+              (accept.contains("text/csv"), accept.contains("text/tab-separated-values"))
             val df =
-              try Sparql.select(ref.get.quads, q)
+              try
+                if (csv || tsv) Sparql.select(ref.get.quads, q)
+                else Sparql.selectTerms(ref.get.quads, q)
               catch {
                 case e: Exception =>
                   respond(ex, 400, "text/plain", s"parse error: ${e.getMessage}")
                   return
               }
-            val accept = Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
-            if (accept.contains("text/csv")) streamCsv(ex, df)
-            else if (accept.contains("text/tab-separated-values")) streamTsv(ex, df)
-            else if (accept.contains("application/sparql-results+xml"))
-              streamXml(ex, withTermKinds(df, ref.get.termKinds))
-            else streamJson(ex, withTermKinds(df, ref.get.termKinds))
+            if (csv) streamCsv(ex, df)
+            else if (tsv) streamTsv(ex, df)
+            else if (accept.contains("application/sparql-results+xml")) streamXml(ex, df)
+            else streamJson(ex, df)
         }
       } catch {
         case e: Exception =>
@@ -305,112 +280,66 @@ object SparqlEndpoint {
       if (bytes.nonEmpty) ex.getResponseBody.write(bytes)
     }
 
-    /** SPARQL results JSON, streamed row by row (chunked). The input
-      * carries `__kind_<col>` columns from [[withTermKinds]]. */
-    private def streamJson(ex: HttpExchange, df: DataFrame): Unit = {
-      val all = df.columns
-      val cols = all.filterNot(_.startsWith("__kind_"))
-      val valIdx = cols.map(all.indexOf(_))
-      val kindIdx = cols.map(c => all.indexOf(s"__kind_$c"))
-      ex.getResponseHeaders.set("Content-Type", "application/sparql-results+json")
+    /** Stream `df` as `head`, one `line` per row with `sep` between
+      * rows, then `foot`: chunked, one partition in flight at a time. */
+    private def streamRows(ex: HttpExchange, contentType: String, df: DataFrame,
+        head: String, line: Row => String, sep: String = "", foot: String = ""): Unit = {
+      ex.getResponseHeaders.set("Content-Type", contentType)
       ex.sendResponseHeaders(200, 0) // 0 => chunked
       val out: OutputStream = ex.getResponseBody
       def w(s: String): Unit = out.write(s.getBytes(StandardCharsets.UTF_8))
-      w("""{"head":{"vars":[""")
-      w(cols.map(c => "\"" + jsonEscape(c) + "\"").mkString(","))
-      w("""]},"results":{"bindings":[""")
+      w(head)
       val it = df.toLocalIterator()
-      var first = true
-      while (it.hasNext) {
-        val row = it.next()
-        if (!first) w(",")
-        first = false
-        val fields = cols.indices.flatMap { i =>
-          Option(row.get(valIdx(i))).map { v =>
-            val s = v.toString
-            val kind = Some(kindIdx(i)).filter(_ >= 0)
-              .filterNot(row.isNullAt).map(row.getByte)
-            val tpe = termType(kind, s)
-            "\"" + jsonEscape(cols(i)) +
-              "\":{\"type\":\"" + tpe + "\",\"value\":\"" +
-              jsonEscape(s) + "\"}"
-          }
-        }
-        w("{" + fields.mkString(",") + "}")
-      }
-      w("]}}")
+      if (it.hasNext) w(line(it.next()))
+      while (it.hasNext) { w(sep); w(line(it.next())) }
+      w(foot)
       out.flush()
     }
 
-    /** SPARQL results XML (the reference's second tuple format), streamed. */
+    /** SPARQL results JSON from a [[Sparql.selectTerms]] frame. */
+    private def streamJson(ex: HttpExchange, df: DataFrame): Unit = {
+      val (cols, read) = bindings(df)
+      def str(s: String) = "\"" + jsonEscape(s) + "\""
+      streamRows(ex, "application/sparql-results+json", df,
+        s"""{"head":{"vars":[${cols.map(str).mkString(",")}]},"results":{"bindings":[""",
+        row => cols.zip(read(row)).collect { case (c, Some(b)) =>
+          s"""${str(c)}:{"type":${str(b.tpe)},"value":${str(b.value)}""" +
+            b.tag.map { case (k, t) => s",${str(k)}:${str(t)}" }.getOrElse("") + "}"
+        }.mkString("{", ",", "}"),
+        sep = ",", foot = "]}}")
+    }
+
+    /** SPARQL results XML (the reference's second tuple format) from a
+      * [[Sparql.selectTerms]] frame. */
     private def streamXml(ex: HttpExchange, df: DataFrame): Unit = {
-      val all = df.columns
-      val cols = all.filterNot(_.startsWith("__kind_"))
-      val valIdx = cols.map(all.indexOf(_))
-      val kindIdx = cols.map(c => all.indexOf(s"__kind_$c"))
-      ex.getResponseHeaders.set("Content-Type", "application/sparql-results+xml")
-      ex.sendResponseHeaders(200, 0)
-      val out = ex.getResponseBody
-      def w(s: String): Unit = out.write(s.getBytes(StandardCharsets.UTF_8))
-      w("""<?xml version="1.0"?><sparql xmlns="http://www.w3.org/2005/sparql-results#"><head>""")
-      cols.foreach(c => w(s"""<variable name="${xmlEscape(c)}"/>"""))
-      w("</head><results>")
-      val it = df.toLocalIterator()
-      while (it.hasNext) {
-        val row = it.next()
-        w("<result>")
-        cols.indices.foreach { i =>
-          Option(row.get(valIdx(i))).foreach { v =>
-            val s = v.toString
-            val kind = Some(kindIdx(i)).filter(_ >= 0)
-              .filterNot(row.isNullAt).map(row.getByte)
-            val tag = termType(kind, s)
-            w(s"""<binding name="${xmlEscape(cols(i))}"><$tag>${xmlEscape(s)}</$tag></binding>""")
-          }
-        }
-        w("</result>")
-      }
-      w("</results></sparql>")
-      out.flush()
+      val (cols, read) = bindings(df)
+      streamRows(ex, "application/sparql-results+xml", df,
+        """<?xml version="1.0"?><sparql xmlns="http://www.w3.org/2005/sparql-results#"><head>""" +
+          cols.map(c => s"""<variable name="${xmlEscape(c)}"/>""").mkString + "</head><results>",
+        row => cols.zip(read(row)).collect { case (c, Some(b)) =>
+          val attr = b.tag.map { case (k, t) => s""" $k="${xmlEscape(t)}"""" }.getOrElse("")
+          s"""<binding name="${xmlEscape(c)}"><${b.tpe}$attr>""" +
+            s"""${xmlEscape(b.value)}</${b.tpe}></binding>"""
+        }.mkString("<result>", "", "</result>"),
+        foot = "</results></sparql>")
     }
 
-    /** SPARQL results CSV (RFC 4180-ish), streamed. */
-    private def streamCsv(ex: HttpExchange, df: DataFrame): Unit = {
-      val cols = df.columns
-      ex.getResponseHeaders.set("Content-Type", "text/csv; charset=utf-8")
-      ex.sendResponseHeaders(200, 0)
-      val out = ex.getResponseBody
-      def w(s: String): Unit = out.write(s.getBytes(StandardCharsets.UTF_8))
-      w(cols.map(csvEscape).mkString(",") + "\r\n")
-      val it = df.toLocalIterator()
-      while (it.hasNext) {
-        val row = it.next()
-        w(cols.indices.map(i =>
-          Option(row.get(i)).map(v => csvEscape(v.toString)).getOrElse(""))
-          .mkString(",") + "\r\n")
-      }
-      out.flush()
-    }
+    /** A row's values as strings, "" where unbound. */
+    private def cells(row: Row): Seq[String] =
+      row.toSeq.map(v => Option(v).map(_.toString).getOrElse(""))
 
-    /** SPARQL results TSV, streamed. */
-    private def streamTsv(ex: HttpExchange, df: DataFrame): Unit = {
-      val cols = df.columns
-      ex.getResponseHeaders.set("Content-Type", "text/tab-separated-values; charset=utf-8")
-      ex.sendResponseHeaders(200, 0)
-      val out = ex.getResponseBody
-      def w(s: String): Unit = out.write(s.getBytes(StandardCharsets.UTF_8))
-      w(cols.map("?" + _).mkString("\t") + "\n")
-      val it = df.toLocalIterator()
-      while (it.hasNext) {
-        val row = it.next()
-        w(cols.indices.map(i =>
-          Option(row.get(i)).map(v =>
-            v.toString.replace("\\", "\\\\").replace("\t", "\\t").replace("\n", "\\n"))
-            .getOrElse(""))
-          .mkString("\t") + "\n")
-      }
-      out.flush()
-    }
+    /** SPARQL results CSV (RFC 4180-ish). */
+    private def streamCsv(ex: HttpExchange, df: DataFrame): Unit =
+      streamRows(ex, "text/csv; charset=utf-8", df,
+        df.columns.map(csvEscape).mkString("", ",", "\r\n"),
+        row => cells(row).map(csvEscape).mkString("", ",", "\r\n"))
+
+    /** SPARQL results TSV. */
+    private def streamTsv(ex: HttpExchange, df: DataFrame): Unit =
+      streamRows(ex, "text/tab-separated-values; charset=utf-8", df,
+        df.columns.map("?" + _).mkString("", "\t", "\n"),
+        row => cells(row).map(_.replace("\\", "\\\\").replace("\t", "\\t")
+          .replace("\n", "\\n")).mkString("", "\t", "\n"))
 
     /** CONSTRUCT/DESCRIBE results in a subject-grouped serialization
       * (prefixed Turtle, flat expanded JSON-LD, or RDF/XML — the legacy
@@ -456,7 +385,7 @@ object SparqlEndpoint {
     /** One result row as a [[TermRow]]; `idx` maps the frame's column
       * names to positions, and a missing `oKind` reads as a literal, a
       * missing `oDt`/`oLang` as null. */
-    private def termRow(idx: Map[String, Int], row: org.apache.spark.sql.Row): TermRow = {
+    private def termRow(idx: Map[String, Int], row: Row): TermRow = {
       def strCol(c: String): String =
         idx.get(c).map(i => if (row.isNullAt(i)) null else row.getString(i)).orNull
       (row.getString(idx("s")), row.getString(idx("p")), row.getString(idx("o")),
@@ -467,14 +396,8 @@ object SparqlEndpoint {
     /** CONSTRUCT results as N-Quads lines, streamed. Expects the
       * (s, p, o, oKind, ..., g) layout [[Sparql.construct]] produces. */
     private def streamNQuads(ex: HttpExchange, df: DataFrame): Unit = {
-      ex.getResponseHeaders.set("Content-Type", "application/n-quads; charset=utf-8")
-      ex.sendResponseHeaders(200, 0)
-      val out = ex.getResponseBody
-      def w(s: String): Unit = out.write(s.getBytes(StandardCharsets.UTF_8))
       val idx = df.columns.zipWithIndex.toMap
-      val it = df.toLocalIterator()
-      while (it.hasNext) {
-        val row = it.next()
+      streamRows(ex, "application/n-quads; charset=utf-8", df, "", { row =>
         val (s, p, o, kind, dt, lang) = termRow(idx, row)
         val g = row.getString(idx("g"))
         // shared N-Triples term rule: ^^datatype / @lang survive;
@@ -482,9 +405,8 @@ object SparqlEndpoint {
         val oTerm = graft.sources.NTriples.fmtTerm(o, kind, dt, lang)
         val sTerm = if (s.startsWith("_:")) s else s"<$s>"
         val gTerm = if (g.startsWith("_:")) g else s"<$g>"
-        w(s"$sTerm <$p> $oTerm $gTerm .\n")
-      }
-      out.flush()
+        s"$sTerm <$p> $oTerm $gTerm .\n"
+      })
     }
   }
 }

@@ -31,9 +31,11 @@ object GraftSparkInternals {
   private val Committed = "graft.commit"
 
   /** Materialize `df` once, right-sized and with measured statistics,
-    * in exactly one job.
+    * in one measuring job. Under AQE, each exchange below `df` (a shuffle
+    * map stage, a broadcast) first runs as a job of its own, so an input
+    * with exchanges costs one job more per exchange.
     *
-    * That job computes the rows into local-checkpoint blocks and measures
+    * The measuring job computes the rows into local-checkpoint blocks and measures
     * their count and UnsafeRow bytes. The partition count becomes
     * `max(1, ceil(bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes))`
     * (the size AQE already aims a shuffle partition at); when that differs

@@ -109,6 +109,20 @@ class CommitSpec extends SparkSpec {
     }
   }
 
+  it should "run each shuffle map stage below its input as a job before the measuring job" in {
+    // AQE materializes the repartition's map stage as its own job when the
+    // plan is checkpointed; the measuring job follows
+    val shuffled = spark.range(0, 400, 1, 2).select(
+      concat(lit("s:"), $"id").as("s"), lit("p").as("p"), ($"id" % 7).cast("string").as("o"),
+      lit(2.toByte).as("oKind"), lit(null).cast("string").as("oDt"),
+      lit(null).cast("string").as("oLang"), lit("g").as("g")).repartition(3)
+    var committed: DataFrame = null
+    JobCounter.jobsDuring(spark.sparkContext) {
+      committed = QuadStore.commit(shuffled)
+    } shouldBe 2
+    committed.count() shouldBe 400
+  }
+
   it should "run no job when the version is already committed" in {
     val committed = QuadStore.commit(raw)
     var again: DataFrame = null

@@ -185,6 +185,77 @@ class SparqlEndpointSpec extends SparkSpec {
       xml.body() should endWith("</results></sparql>")
     }
 
+  it should "serve a literal's datatype and language in JSON and XML results" in {
+    val s2 = SparqlEndpoint.start(Seq(
+      ("e1", "startDate", "2024-03-12T08:30:00Z", 2.toByte, Quad.Xsd.dateTime,
+        null: String, "g1"),
+      ("e1", "name", "Fete", 2.toByte, null: String, "fr", "g1"))
+      .toDF("s", "p", "o", "oKind", "oDt", "oLang", "g"))
+    try {
+      val q = "SELECT ?d ?n WHERE { <e1> <startDate> ?d . <e1> <name> ?n }"
+      val json = get(s2, q).body()
+      json should include(""""d":{"type":"literal","value":"2024-03-12T08:30:00Z",""" +
+        s""""datatype":"${Quad.Xsd.dateTime}"}""")
+      json should include(""""n":{"type":"literal","value":"Fete","xml:lang":"fr"}""")
+      val xml = get(s2, q, accept = "application/sparql-results+xml").body()
+      xml should include(s"""<binding name="d"><literal datatype="${Quad.Xsd.dateTime}">""" +
+        "2024-03-12T08:30:00Z</literal></binding>")
+      xml should include("""<binding name="n"><literal xml:lang="fr">Fete</literal></binding>""")
+    } finally s2.stop()
+  }
+
+  it should "type path ends, SAMPLE, sub-select, VALUES and one-sided UNION bindings" in {
+    // u:b has no minted scheme, so only its carried kind makes it a uri;
+    // the literal reached by the same path looks like an IRI
+    val s2 = SparqlEndpoint.start(Seq(
+      ("u:a", "u:p", "u:b", 0.toByte, null: String, null: String, "g1"),
+      ("u:b", "u:p", "mailto:x@y.example", 2.toByte, null: String, null: String, "g1"))
+      .toDF("s", "p", "o", "oKind", "oDt", "oLang", "g"))
+    try {
+      val path = get(s2, "SELECT ?y WHERE { <u:a> <u:p>+ ?y }").body()
+      path should include(""""y":{"type":"uri","value":"u:b"}""")
+      path should include(""""y":{"type":"literal","value":"mailto:x@y.example"}""")
+      get(s2, "CONSTRUCT { <u:a> <u:reach> ?y } WHERE { <u:a> <u:p>+ ?y }",
+        accept = "application/n-quads").body().split("\n").toSet shouldBe Set(
+        s"""<u:a> <u:reach> <u:b> <${Sparql.ConstructedGraph}> .""",
+        s"""<u:a> <u:reach> "mailto:x@y.example" <${Sparql.ConstructedGraph}> .""")
+    } finally s2.stop()
+    withServer { server =>
+      get(server, "SELECT (SAMPLE(?y) AS ?s) WHERE { ?x <knows> ?y }").body() should
+        include(""""s":{"type":"uri","value":"bob"}""")
+      get(server, "SELECT ?y WHERE { { SELECT ?y WHERE { ?x <knows> ?y } } }").body() should
+        include(""""y":{"type":"uri","value":"bob"}""")
+      get(server, "SELECT ?x WHERE { <alice> <name> ?n . VALUES ?x { <c:1> } }").body() should
+        include(""""x":{"type":"uri","value":"c:1"}""")
+      val union = get(server,
+        "SELECT ?x ?n WHERE { { ?x <knows> ?y } UNION { <bob> <name> ?n } }").body()
+      union should include("""{"x":{"type":"uri","value":"alice"}}""")
+      union should include("""{"n":{"type":"literal","value":"Bob, \"Bobby\""}}""")
+    }
+  }
+
+  it should "run as many jobs for JSON and XML results, and a variable CONSTRUCT object, " +
+    "as for CSV and a ground object" in {
+    val server = SparqlEndpoint.start(quads)
+    def jobs(q: String, accept: String): Int =
+      org.apache.spark.JobCounter.jobsDuring(spark.sparkContext) {
+        get(server, q, accept).statusCode() shouldBe 200
+      }
+    try {
+      Seq("SELECT ?p ?o WHERE { <alice> ?p ?o }",
+        "SELECT ?x ?n WHERE { ?x <knows> ?y . ?y <name> ?n } ORDER BY ?x",
+        "SELECT DISTINCT ?n WHERE { <alice> <knows> ?a . ?a <knows>* ?b . ?b <name> ?n }")
+        .foreach { q =>
+          val csv = jobs(q, "text/csv")
+          jobs(q, "application/sparql-results+json") shouldBe csv
+          jobs(q, "application/sparql-results+xml") shouldBe csv
+        }
+      val where = "WHERE { ?x <knows> ?y . ?y <name> ?n }"
+      jobs(s"CONSTRUCT { ?x <friendName> ?n } $where", "application/n-quads") shouldBe
+        jobs(s"""CONSTRUCT { ?x <friendName> "n" } $where""", "application/n-quads")
+    } finally server.stop()
+  }
+
   it should "round-trip a SPARQL UPDATE (insert -> query -> delete -> negation check)" in
     withServer { server =>
       // insert through the front door

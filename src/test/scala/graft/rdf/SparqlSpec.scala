@@ -800,6 +800,24 @@ class SparqlSpec extends SparkSpec {
       .as[String].collect().toSeq shouldBe Seq("41")
   }
 
+  /** u:a -p-> u:b (an IRI without a minted scheme) -p-> a literal, and a
+    * blank-node subject. */
+  private lazy val kindQuads = Seq(
+    ("u:a", "u:p", "u:b", Quad.IRI, null: String, null: String, "g"),
+    ("u:b", "u:p", "mailto:x@y.example", Quad.LITERAL, null: String, null: String, "g"),
+    ("_:b1", "u:p", "v", Quad.LITERAL, null: String, null: String, "g"))
+    .toDF("s", "p", "o", "oKind", "oDt", "oLang", "g")
+
+  it should "evaluate isBlank/isIRI/isLiteral wherever a variable is bound" in {
+    Sparql.select(kindQuads, "SELECT ?s WHERE { ?s <u:p> ?o . FILTER(isBlank(?s)) }")
+      .as[String].collect().toSeq shouldBe Seq("_:b1")
+    Sparql.select(kindQuads, "SELECT ?b WHERE { <u:a> <u:p>+ ?b . FILTER(isIRI(?b)) }")
+      .as[String].collect().toSeq shouldBe Seq("u:b")
+    Sparql.select(kindQuads,
+      """SELECT ?y WHERE { <u:b> <u:p> ?o . BIND(?o AS ?y) FILTER(isLiteral(?y)) }""")
+      .as[String].collect().toSeq shouldBe Seq("mailto:x@y.example")
+  }
+
   "FILTER EXISTS without shared variables" should "act as a scalar emptiness test" in {
     // carol (g2) shares no variable with the probe on <knows>
     Sparql.select(quads,
