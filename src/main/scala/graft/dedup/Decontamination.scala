@@ -10,16 +10,14 @@ import org.apache.spark.sql.functions._
   * doc.
   *
   * Scale shape: identical to the Jaccard-dedup substrate — distinct
-  * shingles per doc (single codegen pass where the graft extensions are
-  * installed), hash-join on the shingle key with the (small) benchmark
+  * shingles per doc (single codegen pass), hash-join on the shingle key with the (small) benchmark
   * side broadcast or shuffled by key, output bound by true collisions.
   * No all-pairs product; benchmark growth only widens the build side.
   */
 object Decontamination {
 
   /** Distinct lowercase word n-gram rows per doc — rides the dedup
-    * substrate ([[Dedup.shingled]]: native codegen `word_shingles` when
-    * the session extensions are installed). */
+    * substrate ([[Dedup.shingled]]: native codegen `word_shingles`). */
   private def shingleRows(df: DataFrame, textCol: String, idCol: String,
       n: Int, outId: String): DataFrame =
     Dedup.shingled(

@@ -1,7 +1,6 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import graft.text.TextAnalysis
 
@@ -13,14 +12,11 @@ import graft.text.TextAnalysis
   * candidate set only. This keeps every stage a hash shuffle that AQE can
   * re-plan, with skew handled by the blocking key's natural spread.
   *
-  * When the graft session extensions are installed (the default —
-  * [[graft.GraftSession]] sets `spark.sql.extensions`), the signature
-  * pipelines run on single-pass native expressions
-  * ([[graft.functions.TextHash]]) inside whole-stage codegen with NO
+  * The signature pipelines run on single-pass native expressions
+  * ([[graft.functions.TextHash]], registered by
+  * [[graft.plans.GraftExtensions]]) inside whole-stage codegen with NO
   * materialization barriers: scan -> narrow compute -> one tiny
-  * (id, signature) shuffle -> blocked join. Without the extensions they
-  * fall back to the column-level formulations (interpreted higher-order
-  * functions) with localCheckpoints to stop expression re-inlining.
+  * (id, signature) shuffle -> blocked join.
   */
 object Dedup {
 
@@ -37,32 +33,16 @@ object Dedup {
   private def par(df: DataFrame): Int =
     df.sparkSession.sparkContext.defaultParallelism * 2
 
-  private def haveFn(df: DataFrame, name: String): Boolean =
-    df.sparkSession.sessionState.functionRegistry
-      .functionExists(FunctionIdentifier(name))
-
   /** Distinct word-shingle sets per doc, the shared substrate of the
-    * Jaccard-family dedupers. Native path: one codegen'd pass per row, no
-    * barriers. Fallback: HOF formulation + checkpoints (see class doc).
+    * Jaccard-family dedupers: one codegen'd pass per row, no barriers.
     * Input widening is byte-gated ([[graft.plans.Widen]]): narrow inputs
     * spread to 2× parallelism, corpus-scale inputs keep their scan
     * partitioning instead of paying a full-corpus shuffle. */
   private[dedup] def shingled(df: DataFrame, textCol: String, idCol: String, k: Int): DataFrame =
-    if (haveFn(df, "word_shingles"))
-      graft.plans.Widen(df, factor = 2)
-        .select(col(idCol).as("id"),
-          call_function("word_shingles", col(textCol), lit(k)).as("shingles"))
-        .where(size(col("shingles")) > 0)
-    else
-      graft.plans.Widen(df, factor = 2)
-        .select(col(idCol).as("id"), TextAnalysis.tokens(col(textCol)).as("__toks"))
-        // checkpoint so the token array is materialized once: CollapseProject
-        // would otherwise re-inline tokens() into every shingle-lambda element
-        .localCheckpoint()
-        .select(col("id"),
-          TextAnalysis.wordShinglesFromTokens(col("__toks"), k).as("shingles"))
-        .where(size(col("shingles")) > 0)
-        .localCheckpoint()
+    graft.plans.Widen(df, factor = 2)
+      .select(col(idCol).as("id"),
+        call_function("word_shingles", col(textCol), lit(k)).as("shingles"))
+      .where(size(col("shingles")) > 0)
 
   /** Exact n-gram Jaccard near-dup pairs, threshold as a rational num/den so
     * the comparison is exact integer arithmetic (`den*inter > num*union`):
@@ -198,9 +178,9 @@ object Dedup {
 
   /** MinHash signature: numHashes independent 64-bit hash family members via
     * seeded xxhash64; signature[j] = min over shingles of h_j(shingle).
-    * Column formulation (interpreted HOFs) — the native
-    * `minhash_sigs` expression computes the identical signature in one
-    * codegen'd pass; prefer it on hot paths. */
+    * Column formulation (interpreted HOFs), the reference the native
+    * `minhash_sigs` expression is checked against: it computes the
+    * identical signature in one codegen'd pass. */
   def minhashSignature(shingles: Column, numHashes: Int): Column =
     array((0 until numHashes).map { j =>
       array_min(transform(shingles, s => xxhash64(lit(j), s)))
@@ -224,22 +204,15 @@ object Dedup {
       s"bands ($bands) must divide numHashes ($numHashes) — a remainder " +
         "would silently drop the trailing signature hashes from banding")
     val rows = numHashes / bands
-    val native = haveFn(df, "minhash_sigs")
-    val sRaw = shingled(df, textCol, idCol, k)
-    val s =
-      if (native)
-        // (id, shingles, sig) materialized ONCE: the self-join's two sides
-        // and the verification all read the checkpointed blocks, so the
-        // scan + signature pipeline runs exactly one time. (A repartition
-        // was tried first on the theory that ReuseExchange dedups the two
-        // identical exchanges — it does not fire across the self-join's
-        // re-aliased subtrees, and the plan showed two full scans.)
-        sRaw.withColumn("sig",
-            call_function("minhash_sigs", col("shingles"), lit(numHashes)))
-          .localCheckpoint()
-      else
-        sRaw.withColumn("sig", minhashSignature(col("shingles"), numHashes))
-          .localCheckpoint() // reused by candidate gen AND verification
+    // (id, shingles, sig) materialized ONCE: the self-join's two sides
+    // and the verification all read the checkpointed blocks, so the
+    // scan + signature pipeline runs exactly one time. (A repartition
+    // was tried first on the theory that ReuseExchange dedups the two
+    // identical exchanges — it does not fire across the self-join's
+    // re-aliased subtrees, and the plan showed two full scans.)
+    val s = shingled(df, textCol, idCol, k)
+      .withColumn("sig", call_function("minhash_sigs", col("shingles"), lit(numHashes)))
+      .localCheckpoint()
     val banded = s.select(
       col("id"),
       posexplode(array((0 until bands).map { b =>
@@ -277,19 +250,13 @@ object Dedup {
       s"bands ($bands) must divide numHashes ($numHashes) — a remainder " +
         "would silently drop the trailing signature hashes from banding")
     val rows = numHashes / bands
-    val native = haveFn(df, "minhash_sigs")
-    val sRaw = shingled(df, textCol, idCol, k)
-    val s =
-      if (native)
-        sRaw.withColumn("sig",
-          call_function("minhash_sigs", col("shingles"), lit(numHashes)))
-      else
-        sRaw.withColumn("sig", minhashSignature(col("shingles"), numHashes))
-    s.select(
-      col("id"),
-      posexplode(array((0 until bands).map { b =>
-        xxhash64(slice(col("sig"), b * rows + 1, rows).cast("string"))
-      }: _*)).as(Seq("band", "bandHash")))
+    shingled(df, textCol, idCol, k)
+      .withColumn("sig", call_function("minhash_sigs", col("shingles"), lit(numHashes)))
+      .select(
+        col("id"),
+        posexplode(array((0 until bands).map { b =>
+          xxhash64(slice(col("sig"), b * rows + 1, rows).cast("string"))
+        }: _*)).as(Seq("band", "bandHash")))
   }
 
   /** The dedup decision step: collapse near-dup pairs into clusters
@@ -415,27 +382,15 @@ object Dedup {
     val c = if (chunks > 0) chunks else chunksFor(df.count())
     require(c > maxHamming, s"need more chunks ($c) than maxHamming ($maxHamming)")
     // single-pass native tokenize+hash+simhash (the HOF formulation walks
-    // the array 64 times interpreted); falls back to the column expression
-    // when the session lacks the graft extensions
-    val haveNative = haveFn(df, "simhash64") && haveFn(df, "xxhash64_tokens")
-    val s =
-      if (haveNative)
-        // fingerprint computed once, checkpointed as tiny (id, fp) rows;
-        // both self-join sides read the blocks (ReuseExchange does NOT
-        // dedup the re-aliased self-join exchanges — see minhashLshPairs)
-        graft.plans.Widen(df, factor = 2)
-          .select(col(idCol).as("id"),
-            call_function("simhash64",
-              call_function("xxhash64_tokens", lower(col(textCol)))).as("fp"))
-          .localCheckpoint()
-      else {
-        val hashes = graft.plans.Widen(df, factor = 2)
-          .select(col(idCol).as("id"),
-            transform(TextAnalysis.tokens(lower(col(textCol))), t => xxhash64(t)).as("__hashes"))
-          .localCheckpoint()
-        hashes.select(col("id"), simhashFromHashes(col("__hashes")).as("fp"))
-          .localCheckpoint()
-      }
+    // the array 64 times interpreted); the fingerprint is computed once,
+    // checkpointed as tiny (id, fp) rows, and both self-join sides read
+    // the blocks (ReuseExchange does NOT dedup the re-aliased self-join
+    // exchanges — see minhashLshPairs)
+    val s = graft.plans.Widen(df, factor = 2)
+      .select(col(idCol).as("id"),
+        call_function("simhash64",
+          call_function("xxhash64_tokens", lower(col(textCol)))).as("fp"))
+      .localCheckpoint()
     simhashPairsOfFp(s, c, maxHamming)
   }
 
@@ -457,52 +412,24 @@ object Dedup {
       chunks: Int = 0): DataFrame = {
     val c = if (chunks > 0) chunks else chunksFor(df.count())
     require(c > maxHamming, s"need more chunks ($c) than maxHamming ($maxHamming)")
-    val s =
-      if (haveFn(df, "simhash_md5"))
-        graft.plans.Widen(df, factor = 2)
-          .select(col(idCol).as("id"),
-            call_function("simhash_md5", lower(col(textCol))).as("fp"))
-          .localCheckpoint()
-      else {
-        // column fallback: conv(substr(md5(tok), 1, 15), 16, 10) is the
-        // same 60-bit value the native expression extracts byte-wise
-        val hashes = graft.plans.Widen(df, factor = 2)
-          .select(col(idCol).as("id"),
-            transform(TextAnalysis.tokens(lower(col(textCol))),
-              t => conv(substring(md5(t), 1, 15), 16, 10).cast("long")).as("__hashes"))
-          .localCheckpoint()
-        hashes.select(col("id"), simhashFromHashes(col("__hashes")).as("fp"))
-          .localCheckpoint()
-      }
+    val s = graft.plans.Widen(df, factor = 2)
+      .select(col(idCol).as("id"),
+        call_function("simhash_md5", lower(col(textCol))).as("fp"))
+      .localCheckpoint()
     simhashPairsOfFp(s, c, maxHamming)
   }
 
   /** Shared blocking + verification over a checkpointed (id, fp) table. */
   private def simhashPairsOfFp(s: DataFrame, c: Int, maxHamming: Int): DataFrame = {
-    // combo keys: one key per (c - maxHamming)-subset of chunks. The
-    // native expression emits the whole key array from ONE generated call
-    // (combo table as reference objects); the inline column formulation is
-    // the fallback — identical keys (same xxhash64 fold), but at the
-    // 10-chunk tier its 120 inlined xxhash64 calls exceed janino's method
-    // limit and the projection silently drops out of whole-stage codegen —
-    // exactly on the >500 M-doc path the tier exists for (PlanSpec pins
-    // the native path compiling cleanly at all tiers).
-    val agree = c - maxHamming
-    val comboKeyArray: Column =
-      if (haveFn(s, "simhash_combo_keys"))
-        call_function("simhash_combo_keys", col("fp"), lit(c), lit(maxHamming))
-      else {
-        val bounds = chunkBounds(c)
-        def chunkVal(i: Int): Column = {
-          val (off, w) = bounds(i)
-          shiftright(col("fp"), off).bitwiseAND(lit((1L << w) - 1))
-        }
-        array((0 until c).combinations(agree).toSeq.map { m =>
-          xxhash64(m.map(chunkVal): _*)
-        }: _*)
-      }
+    // combo keys: one key per (c - maxHamming)-subset of chunks, the
+    // whole key array from ONE generated call (combo table as reference
+    // objects). An inline xxhash64-per-combo column formulation would
+    // exceed janino's method limit at the 10-chunk tier (120 calls) and
+    // silently drop out of whole-stage codegen; PlanSpec pins this
+    // compiling cleanly at all tiers.
     val keyed = s.select(col("id"), col("fp"),
-      posexplode(comboKeyArray).as(Seq("combo", "key")))
+      posexplode(call_function("simhash_combo_keys", col("fp"), lit(c), lit(maxHamming)))
+        .as(Seq("combo", "key")))
     keyed.alias("a")
       .join(keyed.alias("b"),
         col("a.combo") === col("b.combo") &&
@@ -551,7 +478,7 @@ object Dedup {
     // into the window's exchange, but a pinned repartition opts out of
     // AQE coalescing and measured ~1.5x slower at the 500k probe.)
     val wins =
-      if (hashWindows && haveFn(df, "word_window_hashes"))
+      if (hashWindows)
         base.select(col(idCol).as("id"),
           explode(call_function("word_window_hashes", col(textCol), lit(w)))
             .as("wkey"))

@@ -74,7 +74,6 @@ object Enrichers {
       outGraph: String = "graft:eventStay",
       staysGraph: String = "graft:stays",
       docGraphPrefix: String = "doc:"): Enricher = (store, _) => {
-    graft.functions.GeoTimeFunctions.register(store.sparkSession)
     // events carry ISO xsd:dateTime (TZID-normalized converter output) or
     // the raw iCal basic form when unparseable — accept both
     // X (zone-offset) parses the trailing Z as UTC; quoting it as a

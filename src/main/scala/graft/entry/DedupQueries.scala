@@ -95,23 +95,13 @@ private[graft] object DedupQueries {
     * join is shuffle-free; at 100 TB the join key becomes the 8-byte
     * xxhash64 of the gram (string keys kept here for oracle parity). */
   private def q100_contamination(s: SparkSession, dir: String): DataFrame = {
-    val native = s.sessionState.functionRegistry.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("word_shingles"))
-    val grams =
-      if (native)
-        // the native shingle pass; its one semantic divergence (a single
-        // shorter tail gram when the doc has < 5 tokens) is cut off by
-        // the token-count guard, after which the two formulations emit
-        // identical distinct gram sets
-        t(s, dir, "documents")
-          .where(size(TextAnalysis.tokens(col("text"))) >= 5)
-          .select(col("doc_id"),
-            explode(call_function("word_shingles", col("text"), lit(5))).as("g"))
-      else
-        t(s, dir, "documents")
-          .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("ts"))
-          .select(col("doc_id"),
-            explode(array_distinct(TextAnalysis.rawShingles(col("ts"), 5))).as("g"))
+    // the native shingle pass emits each doc's distinct 5-grams; its one
+    // divergence from distinct 5-grams (a single shorter tail gram when
+    // the doc has < 5 tokens) is cut off by the token-count guard
+    val grams = t(s, dir, "documents")
+      .where(size(TextAnalysis.tokens(col("text"))) >= 5)
+      .select(col("doc_id"),
+        explode(call_function("word_shingles", col("text"), lit(5))).as("g"))
     val evalGrams = grams.where(col("doc_id") % 97 === 0)
       .select(col("g")).distinct()
     // Broadcast the eval side only while the eval SLICE is broadcast-

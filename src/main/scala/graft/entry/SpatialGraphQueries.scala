@@ -51,13 +51,11 @@ private[graft] object SpatialGraphQueries {
   }
 
   /** F3: codegen'd haversine expression in a margin-safe predicate. */
-  private def q38_haversine(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoTimeFunctions.register(s)
+  private def q38_haversine(s: SparkSession, dir: String): DataFrame =
     eventsAsObservations(s, dir)
       .where(graft.functions.GeoTimeFunctions.haversineMeters(
         col("lat"), col("lon"), lit(40.0), lit(-74.0)) < 9000.0)
       .select(col("event_id"))
-  }
 
   /** A8/A9: time-sequential stay extraction, full output. Oracle-stated
     * like q58 (gaps-and-islands reduction on this geometry) extended to
@@ -84,7 +82,6 @@ private[graft] object SpatialGraphQueries {
     * micros, ratio on floor-second endpoints — identical IEEE division
     * in both engines). */
   private def q40_event_stay_match(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoTimeFunctions.register(s)
     val stays = q39_stays(s, dir).select(
       concat(col("user"), lit("_"), col("start_ms")).as("stay_id"),
       timestamp_millis(col("start_ms")).as("s_start"),

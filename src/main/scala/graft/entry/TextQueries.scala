@@ -214,35 +214,17 @@ private[graft] object TextQueries {
     * training-pipeline extension, no reference counterpart): per document
     * the total and most-frequent 2-gram occurrence counts and the excess
     * (beyond-first) occurrences of repeated 3-grams, all exact integers.
-    * Fully NARROW: the gram list is sorted per row and run-length scanned
-    * with `aggregate` — zero shuffles, zero explodes; at 100 TB this is
-    * embarrassingly parallel map work pipelined into the scan. */
-  private def q99_repetition(s: SparkSession, dir: String): DataFrame = {
-    val native = s.sessionState.functionRegistry.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("repetition_profile"))
-    if (native) {
-      // one-pass codegen'd profile (exact string-keyed; bit-identical to
-      // the column plan below, spec-enforced) — ~20x the column plan's
-      // throughput at corpus scale
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          call_function("repetition_profile", col("text")).as("p"))
-        .select(col("doc_id"), col("p.n_2grams").as("n_2grams"),
-          col("p.top_2gram_n").as("top_2gram_n"),
-          col("p.dup_3gram_excess").as("dup_3gram_excess"))
-    } else {
-      val toks = t(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("ts"))
-      val grams = toks.select(col("doc_id"),
-        array_sort(TextAnalysis.rawShingles(col("ts"), 2)).as("g2"),
-        TextAnalysis.rawShingles(col("ts"), 3).as("g3"))
-      grams.select(col("doc_id"),
-        size(col("g2")).cast("long").as("n_2grams"),
-        TextAnalysis.topRunCount(col("g2")).as("top_2gram_n"),
-        (size(col("g3")) - size(array_distinct(col("g3")))).cast("long")
-          .as("dup_3gram_excess"))
-    }
-  }
+    * Fully NARROW: one codegen'd `repetition_profile` pass per row (exact
+    * string-keyed; bit-identical to the column formulation over
+    * `TextAnalysis.rawShingles`/`topRunCount`, spec-enforced) — zero
+    * shuffles, zero explodes; at 100 TB this is embarrassingly parallel
+    * map work pipelined into the scan. */
+  private def q99_repetition(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents")
+      .select(col("doc_id"), call_function("repetition_profile", col("text")).as("p"))
+      .select(col("doc_id"), col("p.n_2grams").as("n_2grams"),
+        col("p.top_2gram_n").as("top_2gram_n"),
+        col("p.dup_3gram_excess").as("dup_3gram_excess"))
 
   /** Fractional-epoch source mixing (the upsampling half of mixture
     * weights): src0 runs 2.3 epochs, src1 0.4, src2 is dropped, the other

@@ -28,7 +28,8 @@ import org.apache.spark.sql.functions._
 object Sketches {
 
   /** 60-bit md5-family hash — `conv(substr(md5(x),1,15),16,10)`, the
-    * engine-portable hash shared with `Dedup.simhash`'s column fallback. */
+    * engine-portable token hash that `simhash_md5`
+    * ([[graft.dedup.Dedup.simhashPairsMd5]]) computes natively. */
   def md5Hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 

@@ -79,14 +79,13 @@ case class DurationMillis(start: Expression, end: Expression)
     copy(start = l, end = r)
 }
 
-/** Column-level entry points + SQL registration for the custom expressions
-  * (the engine's analogue of the reference's FunctionRegistry additions at
+/** Column-level entry points for the custom expressions, which
+  * [[graft.plans.GraftExtensions]] registers (the engine's analogue of the
+  * reference's FunctionRegistry additions at
   * `core/src/main/com/thymeflow/rdf/repository/RepositoryFactory.scala:248-251`). */
 object GeoTimeFunctions {
   import org.apache.spark.sql.functions.{call_function, lit}
 
-  /** Requires [[register]] on the session first (Column binds to the
-    * registered expression builder at analysis time). */
   def haversineMeters(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column =
     call_function("haversine_m", lat1.cast("double"), lon1.cast("double"),
       lat2.cast("double"), lon2.cast("double"))
@@ -100,14 +99,5 @@ object GeoTimeFunctions {
     make_dt_interval(lit(0), lit(0), lit(0),
       (unix_micros(end.cast("timestamp")) - unix_micros(start.cast("timestamp")))
         .cast("double") / 1000000d)
-  }
-
-  /** Register SQL names so `spark.sql("... haversine_m(...)")` works. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("haversine_m",
-      exprs => Haversine(exprs(0), exprs(1), exprs(2), exprs(3)), "scala_udf")
-    reg.createOrReplaceTempFunction("duration_ms",
-      exprs => DurationMillis(exprs(0), exprs(1)), "scala_udf")
   }
 }

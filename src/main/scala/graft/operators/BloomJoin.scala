@@ -71,25 +71,16 @@ object BloomJoin {
   def mightContain(key: Column, bits: Array[Long], k: Int = DefaultNumHashes): Column =
     call_function("bloom_might_contain", xxhash64(key), lit(bits), lit(k))
 
-  private def haveFn(df: DataFrame, name: String): Boolean =
-    df.sparkSession.sessionState.functionRegistry
-      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name))
-
   /** Prune-then-join: filter the probe side through the bloom bits built
     * from the build side, then run the exact equi-join. The filter sits
     * below the probe side's exchange, so the shuffle only carries rows
-    * that can possibly match (plus the bounded false-positive tail).
-    * Without the registered expression (extension-less session) the
-    * pruning is skipped — the plain join is the same exact result. */
+    * that can possibly match (plus the bounded false-positive tail). */
   def prunedJoin(probe: DataFrame, probeKey: String, build: DataFrame,
       buildKey: String, numBits: Int = DefaultNumBits,
       k: Int = DefaultNumHashes): DataFrame = {
-    val pruned =
-      if (haveFn(probe, "bloom_might_contain")) {
-        val bits = buildBits(build, build(buildKey), numBits, k)
-        probe.where(mightContain(probe(probeKey), bits, k))
-      } else probe
-    pruned.join(build, probe(probeKey) === build(buildKey))
+    val bits = buildBits(build, build(buildKey), numBits, k)
+    probe.where(mightContain(probe(probeKey), bits, k))
+      .join(build, probe(probeKey) === build(buildKey))
   }
 
   /** JVM twin of the column-side position math — called from both the

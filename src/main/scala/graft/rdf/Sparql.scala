@@ -1499,7 +1499,12 @@ object Sparql {
   }
 
   /** ASK variant (PREFIX headers allowed before the ASK keyword). */
-  def ask(quads: DataFrame, queryText: String): Boolean = {
+  def ask(quads: DataFrame, queryText: String): Boolean =
+    !askSolutions(quads, queryText).isEmpty
+
+  /** The compiled solutions an ASK tests for emptiness: parse and plan
+    * errors surface here, before any job runs. */
+  def askSolutions(quads: DataFrame, queryText: String): DataFrame = {
     val toks = expandPrefixes(tokenize(queryText))
     // no WHERE inserted: query() treats it as optional and parses any
     // FROM / FROM NAMED clauses between the items and the group
@@ -1507,7 +1512,7 @@ object Sparql {
       if (toks.headOption.exists(_.equalsIgnoreCase("ASK")))
         "SELECT" :: "*" :: toks.tail
       else toks
-    !compileQuery(quads, new P(body).query()).isEmpty
+    compileQuery(quads, new P(body).query())
   }
 
   // ---------------------------------------------------- CONSTRUCT / UPDATE
@@ -1759,7 +1764,7 @@ object Sparql {
       qs.toDF().select(storeCols: _*)
     }
     def dedupAdds(added: DataFrame): DataFrame =
-      added.join(store, Seq("s", "p", "o", "g"), "left_anti").select(storeCols: _*)
+      added.distinct().join(store, Seq("s", "p", "o", "g"), "left_anti").select(storeCols: _*)
     /** Store rows matching instantiated delete keys; a template without a
       * GRAPH matches any graph. */
     def matchRemovals(keys: DataFrame, withGraph: Boolean): DataFrame =
@@ -1860,6 +1865,8 @@ object Sparql {
           case _: Triple | _: Graphed => true
           case _ => false
         }) else delTempl
+        val inserted =
+          if (insTempl.isEmpty) empty else instantiate(bindings, insTempl, UserGraph)
         val removed =
           if (del.isEmpty) empty
           else {
@@ -1875,11 +1882,14 @@ object Sparql {
                   instantiate(bindings, scoped, UserGraph).select("s", "p", "o", "g"),
                   withGraph = true))
               else Nil)
-            parts.reduceLeft(_.unionByName(_)).distinct()
+            val matched = parts.reduceLeft(_.unionByName(_)).distinct()
+            // §3.1.3: the deletion happens before the insertion, so a quad
+            // the operation both deletes and inserts stays (net form, as
+            // COPY/MOVE)
+            if (insTempl.isEmpty) matched
+            else matched.join(inserted, Seq("s", "p", "o", "g"), "left_anti")
           }
-        val added =
-          if (insTempl.isEmpty) empty
-          else dedupAdds(instantiate(bindings, insTempl, UserGraph))
+        val added = if (insTempl.isEmpty) empty else dedupAdds(inserted)
         QuadDiff(added, removed)
       case t => sys.error(s"unsupported update operation: $t")
     }

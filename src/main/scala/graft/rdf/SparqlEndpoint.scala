@@ -201,58 +201,61 @@ object SparqlEndpoint {
             respond(ex, 200, "application/n-triples", serviceDescription)
           case (None, None) => respond(ex, 400, "text/plain", "missing query parameter")
           case (Some(q), _) if form(q) == "ASK" =>
-            val result = Sparql.ask(ref.get.quads, q)
-            val accept = Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
-            if (accept.contains("application/sparql-results+xml"))
-              respond(ex, 200, "application/sparql-results+xml",
-                "<?xml version=\"1.0\"?><sparql xmlns=\"http://www.w3.org/2005/sparql-results#\">" +
-                  s"<head/><boolean>$result</boolean></sparql>")
-            else respond(ex, 200, "application/sparql-results+json",
-              s"""{"head":{},"boolean":$result}""")
+            compiled(ex, Sparql.askSolutions(ref.get.quads, q)).foreach { solutions =>
+              val result = !solutions.isEmpty
+              val accept = Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
+              if (accept.contains("application/sparql-results+xml"))
+                respond(ex, 200, "application/sparql-results+xml",
+                  "<?xml version=\"1.0\"?><sparql xmlns=\"http://www.w3.org/2005/sparql-results#\">" +
+                    s"<head/><boolean>$result</boolean></sparql>")
+              else respond(ex, 200, "application/sparql-results+json",
+                s"""{"head":{},"boolean":$result}""")
+            }
           case (Some(q), _) if form(q) == "CONSTRUCT" || form(q) == "DESCRIBE" =>
             // graph-result forms: N-Quads by default, Turtle on Accept —
             // the most common RDF tooling default (the reference resolves
             // every RDF4J writer the same way, SparqlService.scala:170-201)
-            val df =
-              try if (form(q) == "CONSTRUCT") Sparql.construct(ref.get.quads, q)
-                  else Sparql.describe(ref.get.quads, q)
-              catch {
-                case e: Exception =>
-                  respond(ex, 400, "text/plain", s"parse error: ${e.getMessage}")
-                  return
-              }
             val accept = Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
-            if (accept.contains("text/turtle"))
-              streamGraph(ex, df, "text/turtle", graft.sources.Turtle.writeStream(_, _))
-            else if (accept.contains("application/ld+json"))
-              streamGraph(ex, df, "application/ld+json", graft.sources.JsonLd.writeStream)
-            else if (accept.contains("application/trig")) streamTrig(ex, df)
-            else if (accept.contains("application/rdf+xml"))
-              streamGraph(ex, df, "application/rdf+xml", graft.sources.RdfXml.writeStream)
-            else streamNQuads(ex, df)
+            compiled(ex,
+              if (form(q) == "CONSTRUCT") Sparql.construct(ref.get.quads, q)
+              else Sparql.describe(ref.get.quads, q)).foreach { df =>
+              if (accept.contains("text/turtle"))
+                streamGraph(ex, df, "text/turtle", graft.sources.Turtle.writeStream(_, _))
+              else if (accept.contains("application/ld+json"))
+                streamGraph(ex, df, "application/ld+json", graft.sources.JsonLd.writeStream)
+              else if (accept.contains("application/trig")) streamTrig(ex, df)
+              else if (accept.contains("application/rdf+xml"))
+                streamGraph(ex, df, "application/rdf+xml", graft.sources.RdfXml.writeStream)
+              else streamNQuads(ex, df)
+            }
           case (Some(q), _) =>
             val accept = Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
             val (csv, tsv) =
               (accept.contains("text/csv"), accept.contains("text/tab-separated-values"))
-            val df =
-              try
-                if (csv || tsv) Sparql.select(ref.get.quads, q)
-                else Sparql.selectTerms(ref.get.quads, q)
-              catch {
-                case e: Exception =>
-                  respond(ex, 400, "text/plain", s"parse error: ${e.getMessage}")
-                  return
-              }
-            if (csv) streamCsv(ex, df)
-            else if (tsv) streamTsv(ex, df)
-            else if (accept.contains("application/sparql-results+xml")) streamXml(ex, df)
-            else streamJson(ex, df)
+            compiled(ex,
+              if (csv || tsv) Sparql.select(ref.get.quads, q)
+              else Sparql.selectTerms(ref.get.quads, q)).foreach { df =>
+              if (csv) streamCsv(ex, df)
+              else if (tsv) streamTsv(ex, df)
+              else if (accept.contains("application/sparql-results+xml")) streamXml(ex, df)
+              else streamJson(ex, df)
+            }
         }
       } catch {
         case e: Exception =>
           try respond(ex, 500, "text/plain", s"error: ${e.getMessage}")
           catch { case _: Exception => () }
       } finally ex.close()
+
+    /** A query's compiled frame, or None once a parse or plan error has
+      * been answered with 400 (execution errors answer 500 later). */
+    private def compiled(ex: HttpExchange, query: => DataFrame): Option[DataFrame] =
+      try Some(query)
+      catch {
+        case e: Exception =>
+          respond(ex, 400, "text/plain", s"parse error: ${e.getMessage}")
+          None
+      }
 
     private def runUpdate(ex: HttpExchange, updateText: String): Unit = {
       // updates serialize on the snapshot ref: with the concurrent

@@ -72,21 +72,19 @@ object Classifier {
   }
 
   /** Score + threshold gate over a document table. Output:
-    * (id, score, keep). When the graft extensions are installed and
-    * `fastHash` is on, scoring runs on the single-pass native
-    * [[graft.functions.LinearScore]] expression (no token array, no
-    * lambda frames — ~4× over the column formulation at 500 k docs);
-    * bit-identical to the column path, spec-enforced. */
+    * (id, score, keep). With `fastHash` on, scoring runs on the
+    * single-pass native [[graft.functions.LinearScore]] expression (no
+    * token array, no lambda frames — ~4× over the column formulation at
+    * 500 k docs); bit-identical to the `fastHash` column formulation,
+    * spec-enforced. */
   def gate(df: DataFrame, textCol: String, idCol: String,
       weights: Seq[Double], bias: Double, threshold: Double,
       fastHash: Boolean = false): DataFrame = {
-    val native = fastHash && df.sparkSession.sessionState.functionRegistry
-      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("linear_score"))
     val score =
-      if (native)
+      if (fastHash)
         call_function("linear_score", col(textCol),
           array(weights.map(lit): _*), lit(bias))
-      else hashedLinearScore(col(textCol), weights, bias, fastHash)
+      else hashedLinearScore(col(textCol), weights, bias)
     df.select(col(idCol), score.as("score"),
       (score > lit(threshold)).as("keep"))
   }

@@ -1,7 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Unicode normalization for text keys and dedup inputs. The same
@@ -15,29 +14,19 @@ import org.apache.spark.sql.functions._
   * noise, not signal.
   *
   * Runs as native codegen expressions ([[graft.functions.UnicodeNfc]] /
-  * [[graft.functions.FoldMarks]], registered by `GraftExtensions`) with
-  * a UDF fallback for sessions without the extension — map-only, no
-  * shuffle, is-already-NFC fast path. NFC is standard-defined so the
-  * DuckDB oracle (`nfc_normalize`) agrees by construction; accent
-  * folding has no cross-engine standard and is spec-pinned instead.
+  * [[graft.functions.FoldMarks]], registered by `GraftExtensions`) —
+  * map-only, no shuffle, is-already-NFC fast path. NFC is
+  * standard-defined so the DuckDB oracle (`nfc_normalize`) agrees by
+  * construction; accent folding has no cross-engine standard and is
+  * spec-pinned instead.
   */
 object Normalize {
 
-  private def haveFn(df: DataFrame, name: String): Boolean =
-    df.sparkSession.sessionState.functionRegistry
-      .functionExists(FunctionIdentifier(name))
-
   /** Adds `<out>` = NFC(textCol). */
   def nfcCol(df: DataFrame, textCol: String, out: String): DataFrame =
-    if (haveFn(df, "unicode_nfc"))
-      df.withColumn(out, call_function("unicode_nfc", col(textCol)))
-    else df.withColumn(out,
-      udf(graft.functions.NormalizeKernels.nfcString _).apply(col(textCol)))
+    df.withColumn(out, call_function("unicode_nfc", col(textCol)))
 
   /** Adds `<out>` = accent-folded(textCol). */
   def foldMarksCol(df: DataFrame, textCol: String, out: String): DataFrame =
-    if (haveFn(df, "fold_marks"))
-      df.withColumn(out, call_function("fold_marks", col(textCol)))
-    else df.withColumn(out,
-      udf(graft.functions.NormalizeKernels.foldMarksString _).apply(col(textCol)))
+    df.withColumn(out, call_function("fold_marks", col(textCol)))
 }

@@ -216,24 +216,9 @@ object TextAnalysis {
     round(lenOk * (lit(0.5) + lit(0.5) * diversity) * (lit(0.5) + least(stopRatio * 5d, lit(0.5))), 6)
   }
 
-  /** N-gram-profile language ID heuristic: scores text against small
-    * per-language marker-token sets, returns best language or 'und'.
-    * Deterministic and cheap (no model); markers chosen for the synthetic
-    * corpus + common English/Spanish/German/French function words. */
   /** Trigram-profile language ID ([[LangId]], Cavnar-Trenkle) as a native
-    * codegen expression; requires the graft session extensions. Supersedes
-    * [[langIdHeuristic]] (kept as the dependency-free fallback). */
+    * codegen expression. */
   def langId(text: Column): Column = call_function("lang_id", text)
-
-  def langIdHeuristic(text: Column, markers: Map[String, Seq[String]]): Column = {
-    val toks = tokens(lower(text))
-    val scored = markers.toSeq.sortBy(_._1).map { case (lang, words) =>
-      val sw = array(words.map(lit): _*)
-      struct(size(filter(toks, t => array_contains(sw, t))).as("hits"), lit(lang).as("lang"))
-    }
-    val best = greatest(scored: _*)
-    when(best.getField("hits") > 0, best.getField("lang")).otherwise(lit("und"))
-  }
 
   /** Gopher-style quality-filter signals (Rae et al., "Scaling Language
     * Models: ... Gopher", 2021, Appendix A — the public rule set): all

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * Hash choice: md5 hex, minimized LEXICOGRAPHICALLY — deterministic and
   * restatable in any SQL dialect (`min(varchar)` over a window frame),
   * which makes the whole operator oracle-checkable. A production run
-  * swaps in `fastHash = true` (xxhash64, numeric min, ~10× cheaper, no
-  * 32-char intermediate strings) — same selection logic, different
+  * swaps in `fastHash = true` (the native xxhash64 kernel, numeric min,
+  * no 32-char intermediate strings) — same selection logic, different
   * fingerprint space.
   *
   * Scale shape: tokenize/shingle/hash are narrow; ONE exchange on the
@@ -30,20 +30,15 @@ object Winnow {
     * Documents shorter than k+w−1 words yield no rows (no complete
     * window).
     *
-    * The `fastHash` path dispatches to the native one-pass `winnow_fps`
-    * kernel when the graft extensions are installed: per-document
-    * sliding-min deque, NO shingle-row explosion and NO doc-partition
-    * sort — the 500 k-doc probe dropped from 390 s (exploded window
-    * plan) to single-digit seconds. The column formulation remains the
-    * oracle-parity path (md5, lexicographic min) and the
-    * extension-free fallback (xxhash64, numeric min — same selection
-    * as the kernel, spec-enforced). */
+    * The `fastHash` path is the native one-pass `winnow_fps` kernel:
+    * per-document sliding-min deque, NO shingle-row explosion and NO
+    * doc-partition sort — the 500 k-doc probe dropped from 390 s
+    * (exploded window plan) to single-digit seconds. The column
+    * formulation is the oracle-parity path (md5, lexicographic min). */
   def fingerprints(df: DataFrame, textCol: String, idCol: String,
       k: Int, w: Int, fastHash: Boolean = false): DataFrame = {
     require(k >= 1 && w >= 1, "k and w must be >= 1")
-    val native = fastHash && df.sparkSession.sessionState.functionRegistry
-      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("winnow_fps"))
-    if (native)
+    if (fastHash)
       return df.select(col(idCol),
         explode(call_function("winnow_fps", col(textCol), lit(k), lit(w)))
           .as("fp"))
@@ -57,8 +52,7 @@ object Winnow {
     val hashed = df
       .select(col(idCol), posexplode(shingles).as(Seq("pos0", "sh")))
       .withColumn("pos", col("pos0") + 1) // 1-based, matching the oracle
-      .withColumn("h",
-        if (fastHash) xxhash64(col("sh")) else md5(col("sh")))
+      .withColumn("h", md5(col("sh")))
     val byDoc = Window.partitionBy(col(idCol))
     val frame = Window.partitionBy(col(idCol)).orderBy(col("pos"))
       .rowsBetween(Window.currentRow, w - 1)

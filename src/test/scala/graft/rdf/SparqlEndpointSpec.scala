@@ -414,6 +414,10 @@ class SparqlEndpointSpec extends SparkSpec {
     get(server, "SELECT WHERE oops").statusCode() shouldBe 400
   }
 
+  it should "reject a malformed ASK with 400" in withServer { server =>
+    get(server, "ASK { ?x <name> }").statusCode() shouldBe 400
+  }
+
   it should "serve the SPARQL service description on query-less GETs" in
     withServer { server =>
       val resp = client.send(

@@ -1006,6 +1006,27 @@ class SparqlSpec extends SparkSpec {
     loadedTtl.filter("g = 'g8' AND o = '31'").count() shouldBe 1
   }
 
+  it should "keep a quad that one DELETE/INSERT both deletes and re-inserts" in {
+    // SPARQL 1.1 Update §3.1.3: the deletion happens before the insertion
+    val store = Seq(
+      quad("u:a", "u:status", "open", Sparql.UserGraph),
+      quad("u:b", "u:status", "closed", Sparql.UserGraph))
+      .toDF("s", "p", "o", "oKind", "oDt", "oLang", "g")
+    Sparql.update(store,
+      """DELETE { ?s <u:status> ?o } INSERT { ?s <u:status> "open" }
+        |WHERE { ?s <u:status> ?o }""".stripMargin)
+      .select("s", "o").as[(String, String)].collect().toSet shouldBe
+      Set(("u:a", "open"), ("u:b", "open"))
+  }
+
+  it should "add a quad repeated in INSERT DATA or a LOADed document once" in {
+    Sparql.update(quads, """INSERT DATA { <u:c> <u:p> "x" . <u:c> <u:p> "x" }""")
+      .where($"s" === "u:c").count() shouldBe 1
+    val f = java.nio.file.Files.createTempDirectory("graft-load").resolve("twice.nt")
+    java.nio.file.Files.writeString(f, "<erin> <name> \"Erin\" .\n<erin> <name> \"Erin\" .\n")
+    Sparql.update(quads, s"LOAD <file://$f>").where($"s" === "erin").count() shouldBe 1
+  }
+
   it should "sequence ;-separated operations against a running snapshot" in {
     // the second op's WHERE must see the first op's insert
     val s1 = Sparql.update(quads,

@@ -44,7 +44,6 @@ class StaySpec extends SparkSpec {
   }
 
   "haversineMeters column" should "run through codegen after registration" in {
-    GeoTimeFunctions.register(spark)
     val d = Seq((48.8566, 2.3522, 51.5074, -0.1278)).toDF("la1", "lo1", "la2", "lo2")
       .select(GeoTimeFunctions.haversineMeters($"la1", $"lo1", $"la2", $"lo2").as("d"))
       .as[Double].head()
@@ -55,7 +54,6 @@ class StaySpec extends SparkSpec {
   }
 
   "durationMillis" should "be an exact epoch difference" in {
-    GeoTimeFunctions.register(spark)
     spark.sql(
       "SELECT duration_ms(TIMESTAMP '2024-01-01 00:00:00', TIMESTAMP '2024-01-01 00:00:01') AS d")
       .as[Long].head() shouldBe 1000L
@@ -150,7 +148,6 @@ class StaySpec extends SparkSpec {
     val stays = Seq(
       (10L, ts("2024-01-01 11:00:00"), ts("2024-01-01 13:00:00"), 40.001, -74.0))
       .toDF("stay_id", "s_start", "s_end", "s_lat", "s_lon")
-    GeoTimeFunctions.register(spark)
     val m = EventStayMatch.matchEvents(events, stays)
       .select("event_id", "stay_id").as[(Long, Long)].collect().toSet
     m shouldBe Set((1L, 10L))

@@ -107,17 +107,6 @@ class TextAnalysisSpec extends SparkSpec {
     row.getInt(3) shouldBe 2 // 4 and 2
   }
 
-  "langIdHeuristic" should "pick the language with most marker hits" in {
-    val markers = Map(
-      "en" -> Seq("the", "and", "of"),
-      "de" -> Seq("der", "und", "das"),
-      "es" -> Seq("el", "y", "de"))
-    val res = Seq("der Hund und das Haus", "the cat and the hat", "zzz qqq")
-      .toDF("t").select(TextAnalysis.langIdHeuristic($"t", markers))
-      .as[String].collect().toSeq
-    res shouldBe Seq("de", "en", "und")
-  }
-
   "langId (trigram profiles)" should "classify sentences in eight languages" in {
     val samples = Seq(
       ("The quick brown fox jumps over the lazy dog and runs into the woods", "en"),
