@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * doc.
   *
   * Scale shape: identical to the Jaccard-dedup substrate — distinct
-  * shingles per doc (single codegen pass), hash-join on the shingle key with the (small) benchmark
-  * side broadcast or shuffled by key, output bound by true collisions.
+  * shingles per doc (single codegen pass), hash-join on the shingle key
+  * with the (small) benchmark side broadcast or shuffled by key, output
+  * bound by true collisions.
   * No all-pairs product; benchmark growth only widens the build side.
   */
 object Decontamination {
